@@ -810,11 +810,11 @@ def gorilla_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pysatl_cpd_spark.operators.segments import roundtrip_summaries
     from pysatl_cpd_spark.operators.series import events_series
 
-    series = events_series(_t(spark, sf_dir, "events")).withColumn(
-        "segment_id", F.lit(0).cast("long")
-    )
-    # fused encode->decode->summarize (roundtrip_summaries): the same codec
-    # calls as decode_segments(encode_segments(...)), computed from the
+    series = events_series(
+        _t(spark, sf_dir, "events"), colocate=spark.sparkContext.defaultParallelism
+    ).withColumn("segment_id", F.lit(0).cast("long"))
+    # fused encode->decode->summarize (roundtrip_summaries) on the co-located
+    # runner: the same codec calls as decode_segments(encode), computed from the
     # DECODED arrays, without shipping every raw point back through Arrow
     # between the stages. Per-series combine of the per-segment rows is
     # exact: the segment holding the globally-smallest t has t_min == that
@@ -1086,18 +1086,11 @@ FROM feats
 # ---------------------------------------------------------------------------
 
 
-def _event_series(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from pysatl_cpd_spark.operators.series import events_series
-
-    return events_series(_t(spark, sf_dir, "events"))
-
-
 def _event_series_colocated(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Series frame for the zero-exchange detect dispatches: the explicit
+    """Series frame for the zero-exchange detect dispatch: the explicit
     repartition under the rank window is the ONE shuffle of the whole
     detect pipeline (the window reuses it, detection adds none) and
-    guarantees every partition holds complete series. Same rows as
-    ``_event_series``."""
+    guarantees every partition holds complete series."""
     from pysatl_cpd_spark.operators.series import events_series
 
     return events_series(
@@ -1116,7 +1109,7 @@ def cpd_bocpd_offline(spark: SparkSession, sf_dir: str) -> DataFrame:
     # BayesianOffline(learning_steps=20) (tests/test_lockstep_offline.py),
     # 1.8-2.4x per core at this series shape. Colocated dispatch over the
     # explicitly-repartitioned series: the detect stage reuses the window's
-    # one shuffle instead of paying a second salt-bucket exchange.
+    # one shuffle and adds no exchange.
     return detect_lockstep_colocated(
         _event_series_colocated(spark, sf_dir),
         lambda: LockstepBayesianOffline(learning_steps=20),
@@ -1129,20 +1122,20 @@ def cpd_bocpd_offline_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     offline detector, batched through the lockstep kernel
     (``LockstepBayesianOffline(mode="detect")``, differential-tested against
     the sequential ``BayesianOffline.detect`` in tests/test_lockstep_offline
-    .py) and dispatched via ``detect_counts_lockstep`` — one row per series,
-    zero counts included. Params (learn=10, rate=50, thr=0.04) make the
+    .py) and dispatched in the one dispatch's count mode — one row per
+    series, zero counts included. Params (learn=10, rate=50, thr=0.04) make the
     sf0.01 gate non-vacuous: 47/150 series fire (defaults fired on 2)."""
     from pysatl_cpd_spark.detectors.lockstep_offline import (
         LockstepBayesianOffline,
     )
-    from pysatl_cpd_spark.operators.cpd import detect_counts_lockstep
+    from pysatl_cpd_spark.operators.cpd import detect_lockstep_colocated
 
-    return detect_counts_lockstep(
-        _event_series(spark, sf_dir),
+    return detect_lockstep_colocated(
+        _event_series_colocated(spark, sf_dir),
         lambda: LockstepBayesianOffline(
             learning_steps=10, rate=50.0, threshold=0.04, mode="detect"
         ),
-        n_buckets=spark.sparkContext.defaultParallelism,
+        output="counts",
     )
 
 
@@ -1165,8 +1158,8 @@ def cpd_bocpd_online(spark: SparkSession, sf_dir: str) -> DataFrame:
         bare=True,
     )
     # colocated dispatch: the window's explicit repartition is the one
-    # shuffle; detection streams each partition's complete series with no
-    # salt-bucket exchange (output identical — kernel lanes independent)
+    # shuffle; detection streams each partition's complete series and adds
+    # no exchange
     return detect_lockstep_colocated(
         _event_series_colocated(spark, sf_dir), factory
     )
@@ -1337,27 +1330,31 @@ GROUP BY series_id, seg
 
 def cpd_classification(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pysatl_cpd_spark.detectors.classification import ClassificationCpd, KnnClassifier
-    from pysatl_cpd_spark.operators.cpd import detect_windowed
+    from pysatl_cpd_spark.operators.cpd import detect_lockstep_colocated, windowed
 
-    return detect_windowed(
-        _event_series(spark, sf_dir),
-        # threshold 0.5 → 54 detections at sf0.01 (0.85 detected nothing,
-        # making the driver's rows check vacuous)
-        lambda: ClassificationCpd(KnnClassifier(7), "mcc", 0.5, 0.25),
-        window_length=48,
-        shift_factor=0.5,
+    return detect_lockstep_colocated(
+        _event_series_colocated(spark, sf_dir),
+        windowed(
+            # threshold 0.5 → 54 detections at sf0.01 (0.85 detected nothing,
+            # making the rows check vacuous)
+            lambda: ClassificationCpd(KnnClassifier(7), "mcc", 0.5, 0.25),
+            window_length=48,
+            shift_factor=0.5,
+        ),
     )
 
 
 def cpd_knn(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pysatl_cpd_spark.detectors.knn_stat import KnnCpd
-    from pysatl_cpd_spark.operators.cpd import detect_windowed
+    from pysatl_cpd_spark.operators.cpd import detect_lockstep_colocated, windowed
 
-    return detect_windowed(
-        _event_series(spark, sf_dir),
-        lambda: KnnCpd(threshold=4.5, indent_coeff=0.25, k=7),
-        window_length=48,
-        shift_factor=0.5,
+    return detect_lockstep_colocated(
+        _event_series_colocated(spark, sf_dir),
+        windowed(
+            lambda: KnnCpd(threshold=4.5, indent_coeff=0.25, k=7),
+            window_length=48,
+            shift_factor=0.5,
+        ),
     )
 
 
@@ -1368,19 +1365,24 @@ def cpd_knn_multivariate(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql import Window as W
 
     from pysatl_cpd_spark.detectors.knn_stat import KnnCpd
-    from pysatl_cpd_spark.operators.cpd import detect_offline_multivariate
+    from pysatl_cpd_spark.operators.cpd import detect_lockstep_colocated, per_series
 
-    ev = _t(spark, sf_dir, "events")
-    w = W.partitionBy("user_id").orderBy("ts", "event_id")
+    # explicit key repartition under the window: the one shuffle, and the
+    # co-location the dispatch needs (as events_series(colocate=n))
+    ev = _t(spark, sf_dir, "events").select(
+        F.col("user_id").cast("string").alias("series_id"), "ts", "event_id", "value"
+    ).repartition(spark.sparkContext.defaultParallelism, "series_id")
+    w = W.partitionBy("series_id").orderBy("ts", "event_id")
     tsd = F.col("ts").cast("timestamp").cast("double")
     gap = F.coalesce(tsd - F.lag(tsd).over(w), F.lit(0.0))
     series = ev.select(
-        F.col("user_id").cast("string").alias("series_id"),
+        "series_id",
         (F.row_number().over(w) - F.lit(1)).alias("t"),
         F.array(F.col("value").cast("double"), gap).alias("vec"),
     )
-    return detect_offline_multivariate(
-        series, lambda: KnnCpd(threshold=3.0, indent_coeff=0.25, k=7)
+    return detect_lockstep_colocated(
+        series,
+        per_series(lambda v: KnnCpd(threshold=3.0, indent_coeff=0.25, k=7).localize(v)),
     )
 
 
@@ -1388,15 +1390,17 @@ def cpd_graph(spark: SparkSession, sf_dir: str) -> DataFrame:
     import numpy as np
 
     from pysatl_cpd_spark.detectors.graph_stat import GraphCpd
-    from pysatl_cpd_spark.operators.cpd import detect_windowed
+    from pysatl_cpd_spark.operators.cpd import detect_lockstep_colocated, windowed
 
-    return detect_windowed(
-        _event_series(spark, sf_dir),
-        # threshold 2.0 → 99 detections at sf0.01; the previous 3.0 passed
-        # the oracle vacuously as 0-rows-vs-0-rows
-        lambda: GraphCpd(lambda a, b: np.abs(a - b) <= 5.0, threshold=2.0),
-        window_length=100,
-        shift_factor=1.0 / 3.0,
+    return detect_lockstep_colocated(
+        _event_series_colocated(spark, sf_dir),
+        windowed(
+            # threshold 2.0 → 99 detections at sf0.01; the previous 3.0 passed
+            # the oracle vacuously as 0-rows-vs-0-rows
+            lambda: GraphCpd(lambda a, b: np.abs(a - b) <= 5.0, threshold=2.0),
+            window_length=100,
+            shift_factor=1.0 / 3.0,
+        ),
     )
 
 
@@ -1484,25 +1488,29 @@ WHERE variance > 0 AND -(dev / sqrt(variance)) > {threshold}
 
 def cpd_kliep(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pysatl_cpd_spark.detectors.density import KliepCpd
-    from pysatl_cpd_spark.operators.cpd import detect_windowed
+    from pysatl_cpd_spark.operators.cpd import detect_lockstep_colocated, windowed
 
-    return detect_windowed(
-        _event_series(spark, sf_dir),
-        lambda: KliepCpd(bandwidth=1.0, regularization_coef=0.01, threshold=1.5),
-        window_length=100,
-        shift_factor=1.0 / 3.0,
+    return detect_lockstep_colocated(
+        _event_series_colocated(spark, sf_dir),
+        windowed(
+            lambda: KliepCpd(bandwidth=1.0, regularization_coef=0.01, threshold=1.5),
+            window_length=100,
+            shift_factor=1.0 / 3.0,
+        ),
     )
 
 
 def cpd_rulsif(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pysatl_cpd_spark.detectors.density import RulsifCpd
-    from pysatl_cpd_spark.operators.cpd import detect_windowed
+    from pysatl_cpd_spark.operators.cpd import detect_lockstep_colocated, windowed
 
-    return detect_windowed(
-        _event_series(spark, sf_dir),
-        lambda: RulsifCpd(bandwidth=1.0, regularization_coef=0.01, threshold=1.5),
-        window_length=100,
-        shift_factor=1.0 / 3.0,
+    return detect_lockstep_colocated(
+        _event_series_colocated(spark, sf_dir),
+        windowed(
+            lambda: RulsifCpd(bandwidth=1.0, regularization_coef=0.01, threshold=1.5),
+            window_length=100,
+            shift_factor=1.0 / 3.0,
+        ),
     )
 
 
@@ -1537,7 +1545,7 @@ def cpd_detect_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     transcription-oracle hash gate holds while the batch kernel replaces
     the per-series sequential scan."""
     from pysatl_cpd_spark.detectors.lockstep import LockstepLinearBOCPD
-    from pysatl_cpd_spark.operators.cpd import detect_counts_lockstep
+    from pysatl_cpd_spark.operators.cpd import detect_lockstep_colocated
 
     factory = lambda: LockstepLinearBOCPD(  # noqa: E731
         1.0 / (1.0 - 0.5 ** (1.0 / 500)),
@@ -1547,10 +1555,8 @@ def cpd_detect_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
         bare=True,
         detector="drop",
     )
-    return detect_counts_lockstep(
-        _event_series(spark, sf_dir),
-        factory,
-        n_buckets=spark.sparkContext.defaultParallelism,
+    return detect_lockstep_colocated(
+        _event_series_colocated(spark, sf_dir), factory, output="counts"
     )
 
 
@@ -2178,7 +2184,7 @@ def transcripts_cpd_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     series = turn_rate_series(tr).repartition(n_parts, "series_id").cache()
     # JVM CUSUM pre-filter: the window-function twin of the detector's first
     # pass — only series it flags can produce change points (exact gate), so
-    # the pandas-UDF localization runs on the alarmed subset only; the
+    # the Python localization runs on the alarmed subset only; the
     # localization itself is the batched lockstep kernel (bit-identical to
     # the sequential CusumDetector, tests/test_lockstep_cusum.py)
     alarmed = cusum_prefilter(series, k=0.05, h=2.0)
@@ -2360,10 +2366,8 @@ def transcripts_cpd_rollup_coded(spark: SparkSession, sf_dir: str) -> DataFrame:
     n_parts = spark.sparkContext.defaultParallelism
     coded, dim = compact_series_key(turn_rate_series(tr), n_partitions=n_parts)
     coded = coded.cache()
-    cps = detect_lockstep_colocated(
-        coded, lambda: LockstepCusum(k=0.05, h=2.0), key_type="long"
-    )
-    enc = encode_segments_colocated(coded, cps, key_type="long")
+    cps = detect_lockstep_colocated(coded, lambda: LockstepCusum(k=0.05, h=2.0))
+    enc = encode_segments_colocated(coded, cps)
     return attach_series_id(enc, dim).select(
         "series_id",
         "segment_id",
@@ -2376,22 +2380,24 @@ def transcripts_cpd_rollup_coded(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def cpd_colocated_metrics(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Observability surface of the zero-exchange production path
-    (detect_colocated_instrumented): per-series lineage/metrics rows from
+    """Observability surface of the zero-exchange production path (the one
+    dispatch's ``output="metrics"`` mode): per-series lineage/metrics rows from
     the flagship transcripts — the deterministic columns only (kernel_ms
     and partition_id are run-dependent by nature). Value-checks that the
-    instrumented dispatch sees every series exactly once with the right
+    metrics mode sees every series exactly once with the right
     point count and detection count — the bookkeeping exact resume relies
     on."""
     from pysatl_cpd_spark.detectors import LockstepCusum
-    from pysatl_cpd_spark.operators.cpd import detect_colocated_instrumented
+    from pysatl_cpd_spark.operators.cpd import detect_lockstep_colocated
     from pysatl_cpd_spark.operators.series import turn_rate_series
     from pysatl_cpd_spark.sources.transcripts import transcripts_table
 
     tr = transcripts_table(spark, n_conversations=20, avg_turns=300, seed=42)
     n_parts = spark.sparkContext.defaultParallelism
     series = turn_rate_series(tr).repartition(n_parts, "series_id")
-    m = detect_colocated_instrumented(series, lambda: LockstepCusum(k=0.05, h=2.0))
+    m = detect_lockstep_colocated(
+        series, lambda: LockstepCusum(k=0.05, h=2.0), output="metrics"
+    )
     return m.select("series_id", "n_points", "n_change_points")
 
 
@@ -2417,16 +2423,18 @@ def entry(spark: SparkSession) -> DataFrame:
     summarize)."""
     sf_dir = "/root/testdata/sf0.001"
     from pysatl_cpd_spark.detectors import LockstepCusum
-    from pysatl_cpd_spark.operators.cpd import detect_offline_lockstep
+    from pysatl_cpd_spark.operators.cpd import detect_lockstep_colocated
     from pysatl_cpd_spark.operators.cusum import cusum_prefilter
-    from pysatl_cpd_spark.operators.segments import encode_segments_adaptive
+    from pysatl_cpd_spark.operators.segments import encode_segments_colocated
     from pysatl_cpd_spark.operators.series import events_series
 
-    series = events_series(_t(spark, sf_dir, "events")).cache()
+    series = events_series(
+        _t(spark, sf_dir, "events"), colocate=spark.sparkContext.defaultParallelism
+    ).cache()
     alarmed = cusum_prefilter(series, k=2.0, h=20.0)
     gated = series.join(F.broadcast(alarmed), "series_id", "left_semi")
-    cps = detect_offline_lockstep(gated, lambda: LockstepCusum(k=2.0, h=20.0))
-    return encode_segments_adaptive(series, cps).drop("blob")
+    cps = detect_lockstep_colocated(gated, lambda: LockstepCusum(k=2.0, h=20.0))
+    return encode_segments_colocated(series, cps).drop("blob")
 
 
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
@@ -2525,7 +2533,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         # round 8: offline-BOCPD COUNT trajectory (D2 detect path) —
         # beyond-window, value-checked via its own transcription oracle
         "cpd_bocpd_offline_counts": cpd_bocpd_offline_counts,
-        # round 8: zero-exchange instrumented dispatch (lineage/metrics)
+        # round 8: zero-exchange dispatch in metrics mode (lineage/metrics)
         "cpd_colocated_metrics": cpd_colocated_metrics,
         # round 8: coded-key flagship twin (same oracle as the flagship —
         # the key compaction must be output-invisible)

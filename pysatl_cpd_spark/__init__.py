@@ -6,7 +6,8 @@ Spark: the relational spine (scans, rollup aggregates, gap-fill, joins, top-k,
 retention pruning) is declarative DataFrame/SQL handled by Catalyst; the
 non-relational CPD math (BOCPD run-length posteriors, CUSUM, classification /
 kNN / graph / density-ratio statistics) lives in vectorized numpy kernels
-applied per-series via grouped-map pandas UDFs.
+applied per partition of co-located series through one ``mapInArrow``
+dispatch (operators/cpd.detect_lockstep_colocated).
 
 Layout:
     detectors/   pure-numpy CPD kernels (no Spark imports; unit-testable)

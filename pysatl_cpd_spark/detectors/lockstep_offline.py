@@ -64,14 +64,15 @@ class LockstepBayesianOffline:
     ConstantHazard(rate), ThresholdDetector(threshold), ArgmaxLocalizer())``
     with ``process_many(list[series]) -> list[list[int]]`` — the lockstep
     kernel contract shared with ``LockstepLinearBOCPD`` / ``LockstepCusum``,
-    so it drops into ``detect_offline_lockstep`` unchanged.
+    so it drops into ``detect_lockstep_colocated`` unchanged.
 
     ``mode="detect"`` runs the reference's COUNTING trajectory instead
     (``BayesianOffline.detect``): no rewind — after any fire (threshold or
     collapse) the scan relearns from the current ``t`` — and the emitted
     list per lane holds the fire times, so ``len(cps)`` equals the
-    sequential detect count exactly; drop it into ``detect_counts_lockstep``
-    for the distributed count dispatch."""
+    sequential detect count exactly; run it through
+    ``detect_lockstep_colocated(..., output="counts")`` for distributed
+    counts."""
 
     learning_steps: int = 50
     rate: float = DEFAULT_HAZARD_RATE

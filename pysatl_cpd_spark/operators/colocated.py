@@ -1,14 +1,7 @@
 """Streaming per-series iteration over SORTED co-located Arrow batch streams.
 
-The first colocated dispatches (round 6) materialized each whole partition
-(``pa.Table.from_batches(...).combine_chunks()``) and sorted it in Python —
-a full extra copy of every partition through Arrow memory plus an
-O(n log n) pyarrow sort + per-column ``take`` copies. That is bus-bound
-serde work the kernels never needed: the scaling estimator's per-rep table
-blamed exactly this share for the N→4N gap (BENCH.md round-6 conclusion).
-
-This module moves the sort to the JVM (``df.sortWithinPartitions`` — a
-LOCAL Tungsten sort, no exchange, overlapped with the scan) and walks the
+The sort runs in the JVM (``df.sortWithinPartitions`` — a LOCAL Tungsten
+sort, no exchange, overlapped with the scan) and this module walks the
 already-sorted batch stream, assembling ONE SERIES AT A TIME:
 
   - each batch column is read as a numpy view (zero-copy for the numeric
@@ -16,13 +9,13 @@ already-sorted batch stream, assembling ONE SERIES AT A TIME:
     dictionary-encode of the key;
   - a series spanning batches is stitched with one ``np.concatenate`` of
     its views — the only copy, and the copy the kernel needs anyway;
-  - peak Python-side extra memory drops from O(partition) × 3 copies to
-    O(one series) plus whatever the caller buffers deliberately.
+  - peak Python-side extra memory is O(one series) plus whatever the caller
+    buffers deliberately, never a materialized and re-sorted partition (the
+    bus-bound serde share of the round-6 dispatch, BENCH.md).
 
-Used by ``operators.cpd.detect_lockstep_colocated`` and
-``operators.segments.encode_segments_colocated``; parity with the salted /
-adaptive dispatches is asserted by tests/test_lockstep.py and
-tests/test_gorilla.py (byte-identical rows, zero added exchanges).
+This is the engine's one runner: ``operators.cpd.detect_lockstep_colocated``
+and ``operators.segments.encode_segments_colocated`` /
+``roundtrip_summaries`` all stream through ``iter_sorted_series``.
 """
 
 from __future__ import annotations
@@ -47,8 +40,11 @@ def iter_sorted_series(
 
     Contract: the stream is partition-local and ALREADY SORTED by the key
     (``sortWithinPartitions`` upstream), so each series is one contiguous
-    run across the batch sequence. Null numeric values are filled with 0
-    (only the optional marker column ``_cp`` is ever nullable here).
+    run across the batch sequence. Nulls in the change-point marker column
+    ``_cp`` (absent marker) become 0; nulls in any other column pass through
+    as NaN, the value every detector and the codec receive for a missing
+    observation. A list column (``vec array<double>``) arrives as an
+    ``(n, dim)`` array.
 
     Key column may be a string OR an integer (the compacted dense-code path,
     operators/keycompact.py): integer keys skip the per-batch dictionary
@@ -76,9 +72,14 @@ def iter_sorted_series(
         cols_np: "dict[str, np.ndarray]" = {}
         for c in numeric_cols:
             arr = batch.column(schema.get_field_index(c))
-            if arr.null_count:
+            if c == "_cp" and arr.null_count:
                 arr = pc.fill_null(arr, 0)
-            cols_np[c] = arr.to_numpy(zero_copy_only=False)
+            if pa.types.is_list(arr.type):
+                cols_np[c] = (
+                    arr.flatten().to_numpy(zero_copy_only=False).reshape(len(arr), -1)
+                )
+            else:
+                cols_np[c] = arr.to_numpy(zero_copy_only=False)
         bounds = np.flatnonzero(np.diff(codes)) + 1
         starts = np.concatenate(([0], bounds))
         ends = np.concatenate((bounds, [codes.shape[0]]))
@@ -100,8 +101,8 @@ def assert_colocated(series_df: DataFrame, key: str = "series_id") -> None:
     more than one partition (the silent-wrong-results hazard of the
     zero-exchange dispatches). Costs one Spark job with a shuffle over the
     distinct ``(key, partition_id)`` pairs — cheap next to a corrupted
-    result, expensive next to the zero-exchange detection itself, so it is
-    opt-in (``validate=True``) rather than always-on."""
+    result, expensive next to the zero-exchange detection itself, so callers
+    run it explicitly rather than on every dispatch."""
     bad = (
         series_df.select(key)
         .withColumn("_pid", F.spark_partition_id())
@@ -113,7 +114,6 @@ def assert_colocated(series_df: DataFrame, key: str = "series_id") -> None:
     if row is not None:
         raise ValueError(
             f"co-location contract violated: {key}={row[0]!r} spans "
-            f"{row[1]} partitions — repartition(n, {key!r}) the input or "
-            "use the salted dispatch (detect_*_lockstep / "
-            "encode_segments_adaptive)"
+            f"{row[1]} partitions — repartition(n, {key!r}) the input "
+            "before the co-located dispatch"
         )

@@ -1,694 +1,215 @@
-"""Distributed change-point detection over keyed series.
+"""Distributed change-point detection over keyed series — ONE dispatch.
 
-The one Spark-side pattern every detector shares (SURVEY.md §3.1): shuffle by
-series key, order each group by its index, run the numpy kernel inside a
-grouped-map pandas UDF, and emit (series_id, change_point) rows with window-
-local indices remapped to the carried global index column (the reference's
-index-remap law, cpd_core.py:41).
+``detect_lockstep_colocated`` is the engine's only detect path (SURVEY.md
+§3.1, collapsed): the input holds COMPLETE series per partition, each
+partition is sorted locally in the JVM and streamed through one
+``mapInArrow`` call one series at a time (operators/colocated.py), and the
+series go to a batch kernel with the lockstep contract
+``process_many(list[np.ndarray]) -> list[list[int]]``. Kernel positions are
+remapped to the carried global ``t`` (the reference's index-remap law,
+cpd_core.py:41).
 
-Scale levers:
-  - explicit column pruning before the UDF (Catalyst cannot prune through
-    applyInPandas — never ship text/payload columns into the detector);
-  - ``chunk_series`` splits hot keys into overlapping chunks so one giant
-    conversation cannot pin a single executor (salted repartition); chunk
-    windows overlap by the detector's horizon and detections are deduped on
-    the absolute index, so the stitch is exact;
-  - the linear-heuristic detector bounds per-point state, keeping per-series
-    cost linear (the reference's own scaling answer).
+Every detector shape maps onto that one contract:
+  - lockstep kernels (detectors/lockstep*.py, ``LockstepCusum``) directly —
+    one numpy call covers a whole batch of series;
+  - sequential detectors through ``per_series`` (a fresh detector per
+    series);
+  - scrubber windows through ``windowed`` (LinearScrubber slicing in numpy,
+    sorted distinct positions out);
+  - vector series: a ``vec array<double>`` column reaches the kernel as
+    ``(n, dim)`` arrays;
+  - hot keys: ``chunk_series`` folds the chunk id into the key so one giant
+    series fans out over tasks, and ``unchunk`` stitches the detections.
 """
 
 from __future__ import annotations
 
-from typing import Callable, Iterator, Protocol
+from functools import partial
+from typing import Callable
 
 import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame, Window as W, functions as F
 
-CP_SCHEMA = "series_id string, change_point long"
+# points per batched kernel call: keeps the cross-series amortization while
+# bounding peak worker memory by the flush, not the partition
+FLUSH_POINTS = 4_000_000
+# output rows per emitted Arrow batch
+FLUSH_ROWS = 8192
 
 
-class WindowAlgorithm(Protocol):
-    def localize(self, window: np.ndarray) -> list[int]: ...
-
-
-class SeriesAlgorithm(Protocol):
-    def process_series(self, values: np.ndarray) -> list[int]: ...
-
-
-def _prepared(series_df: DataFrame) -> DataFrame:
-    # manual column pruning: the UDF barrier hides this from Catalyst
-    return series_df.select("series_id", "t", "value")
-
-
-def _bucketed(series_df: DataFrame, n_buckets: int | None) -> tuple[DataFrame, int]:
-    """Salt series into hash buckets so ONE grouped-map UDF call carries many
-    complete series: per-group Arrow round-trip + scheduling overhead was the
-    dominant cost for small-series workloads (1,500 event series at sf0.1 =
-    0.09 s of kernel work inside 4.3 s of per-group dispatch). Bucket count
-    defaults to 2x parallelism — full occupancy, ~parallelism-fold fewer UDF
-    calls.
-
-    The EXPLICIT repartition is load-bearing: detector input is small in
-    bytes but heavy in Python CPU, so AQE's byte-based partition coalescing
-    would merge the post-shuffle partitions down to ~1 and serialize the
-    whole UDF stage (measured: 3.2 s wall for 2.7 core-seconds of kernel).
-    A user-specified repartition is exempt from AQE coalescing, and the
-    grouped-map below reuses its hash partitioning (no second shuffle) —
-    the same fix encode_segments_adaptive applies to the encode stage.
-
-    ``n_buckets=0`` opts OUT of salting: the caller asserts the input is
-    already co-located by series_id (a bucketed table whose ingest shuffle
-    was paid once) and detection groups by series_id directly — ZERO
-    exchanges (plan-asserted in tests/test_io.py). Salting such input would
-    re-shuffle what storage bucketing already placed."""
-    spark = series_df.sparkSession
-    if n_buckets is None:
-        n_buckets = 2 * spark.sparkContext.defaultParallelism
-    if n_buckets == 0:
-        return _prepared(series_df), 0
-    return (
-        _prepared(series_df)
-        .withColumn("bucket", F.pmod(F.xxhash64("series_id"), F.lit(n_buckets)))
-        .repartition(n_buckets, "bucket"),
-        n_buckets,
-    )
-
-
-def detect_offline(
-    series_df: DataFrame,
-    algorithm_factory: Callable[[], WindowAlgorithm],
-    n_buckets: int | None = None,
-) -> DataFrame:
-    """Run a windowed (offline) detector over each whole series.
-
-    series_df: (series_id, t, value). Returns (series_id, change_point) where
-    change_point is the global ``t`` of the detected index. Series are
-    processed many-per-UDF-call (see ``_bucketed``); a fresh detector per
-    series keeps state isolation identical to one-group-per-series."""
-
-    def run(pdf: pd.DataFrame) -> pd.DataFrame:
-        pdf = pdf.sort_values(["series_id", "t"])
-        out_ids: list[str] = []
-        out_cps: list[int] = []
-        for sid, grp in pdf.groupby("series_id", sort=False):
-            values = grp["value"].to_numpy(dtype=np.float64)
-            index = grp["t"].to_numpy()
-            for c in algorithm_factory().localize(values):
-                out_ids.append(sid)
-                out_cps.append(int(index[c]))
-        return pd.DataFrame(
-            {
-                "series_id": pd.Series(out_ids, dtype=str),
-                "change_point": pd.Series(out_cps, dtype="int64"),
-            }
-        )
-
-    bucketed, nb = _bucketed(series_df, n_buckets)
-    key = "series_id" if nb == 0 else "bucket"
-    return bucketed.groupBy(key).applyInPandas(run, CP_SCHEMA)
-
-
-def detect_online(
-    series_df: DataFrame,
-    algorithm_factory: Callable[[], SeriesAlgorithm],
-    n_buckets: int | None = None,
-) -> DataFrame:
-    """Run a per-observation (online) detector across each ordered series.
-    The detector's absolute positions are remapped through the global index.
-    Series are processed many-per-UDF-call (see ``_bucketed``); a fresh
-    detector per series keeps state isolation identical."""
-
-    def run(pdf: pd.DataFrame) -> pd.DataFrame:
-        pdf = pdf.sort_values(["series_id", "t"])
-        out_ids: list[str] = []
-        out_cps: list[int] = []
-        for sid, grp in pdf.groupby("series_id", sort=False):
-            values = grp["value"].to_numpy(dtype=np.float64)
-            index = grp["t"].to_numpy()
-            for c in algorithm_factory().process_series(values):
-                if c < len(index):
-                    out_ids.append(sid)
-                    out_cps.append(int(index[c]))
-        return pd.DataFrame(
-            {
-                "series_id": pd.Series(out_ids, dtype=str),
-                "change_point": pd.Series(out_cps, dtype="int64"),
-            }
-        )
-
-    bucketed, nb = _bucketed(series_df, n_buckets)
-    key = "series_id" if nb == 0 else "bucket"
-    return bucketed.groupBy(key).applyInPandas(run, CP_SCHEMA)
-
-
-def detect_online_lockstep(
-    series_df: DataFrame,
-    lockstep_factory: "Callable[[], object]",
-    n_buckets: int | None = None,
-    arrow: bool = True,
-) -> DataFrame:
-    """Online detection with the cross-series LOCKSTEP kernel
-    (detectors/lockstep.py): series are salted into ``n_buckets`` hash
-    buckets, each bucket's ~hundred COMPLETE series process together inside
-    one grouped-map UDF, and every numpy call covers the whole batch — the
-    per-observation dispatch overhead that dominates the sequential kernel
-    amortizes ~batch-fold (measured 3.6x per core at 190 series/bucket).
-    Output and semantics identical to ``detect_online`` with the equivalent
-    sequential factory (bit-identical; enforced by tests/test_lockstep.py
-    and the operator-level differential test).
-
-    ``lockstep_factory`` -> an object with
-    ``process_many(list[np.ndarray]) -> list[list[int]]`` (LockstepLinearBOCPD).
-    ``n_buckets`` defaults to 2x the session's default parallelism — enough
-    tasks to fill the cluster while keeping batches big enough to amortize.
-    Monster series should go through ``chunk_series`` first, as with
-    ``detect_online``. ``n_buckets=0`` (the co-location opt-out of the
-    sequential variants) is rejected: lockstep NEEDS multi-series batches,
-    and a per-series grouping would silently degrade it to worse-than-
-    sequential — use ``detect_online(..., n_buckets=0)`` over bucketed
-    tables instead.
-
-    Dispatch is ARROW-NATIVE (``applyInArrow``, Spark >= 4): the kernel
-    consumes numpy anyway, so the pandas layer bought nothing and cost a
-    table conversion per bucket — worst on the series_id strings, which
-    pandas lands as per-row Python objects while Arrow keeps them as one
-    contiguous buffer that the dispatch only dictionary-encodes.
-    Sort/group/emit all happen on Arrow/numpy arrays; falls back to the
-    pandas path (identical output, asserted by test) when applyInArrow is
-    unavailable. Measured A/B (9.6M pts, local[32], interleaved): output
-    bit-identical, wall time within noise of the pandas path — at
-    production bucket sizes the kernel dominates and the conversion is
-    amortized; the Arrow path is kept for the smaller constant factor and
-    the removed per-bucket object-string materialization."""
-    spark = series_df.sparkSession
-    if n_buckets is None:
-        n_buckets = 2 * spark.sparkContext.defaultParallelism
-    if n_buckets <= 0:
+def series_key_type(series_df: DataFrame) -> str:
+    """Spark type name of the ``series_id`` column — the dispatch contract
+    accepts a string id or the dense int64 code of operators/keycompact.py,
+    and emits the same type back."""
+    dt = series_df.schema["series_id"].dataType.simpleString()
+    if dt not in ("string", "bigint"):
         raise ValueError(
-            "detect_online_lockstep requires n_buckets >= 1 (batching is the "
-            "mechanism); for co-located bucketed input use detect_online with "
-            "n_buckets=0"
+            "co-located dispatch contract: series_id must be string or bigint "
+            f"(operators/keycompact.py dense codes), got {dt}"
         )
-
-    def split_and_run(t_np, v_np, sid_codes):
-        """Shared core: sorted (t, value, series-code) arrays → per-series
-        slices → lockstep kernel → (row-offsets of each cp's series, cps)."""
-        if sid_codes.shape[0] == 0:
-            return [], []
-        bounds = np.flatnonzero(np.diff(sid_codes)) + 1
-        starts = np.concatenate(([0], bounds))
-        ends = np.concatenate((bounds, [sid_codes.shape[0]]))
-        values = [v_np[s:e] for s, e in zip(starts, ends)]
-        all_cps = lockstep_factory().process_many(values)
-        out_rows: list[int] = []
-        out_cps: list[int] = []
-        for s, e, cps in zip(starts, ends, all_cps):
-            index = t_np[s:e]
-            for c in cps:
-                if c < index.shape[0]:
-                    out_rows.append(int(s))
-                    out_cps.append(int(index[c]))
-        return out_rows, out_cps
-
-    def run_arrow(table):
-        return _lockstep_arrow_table(table, lockstep_factory)
-
-    def run_pandas(pdf: pd.DataFrame) -> pd.DataFrame:
-        pdf = pdf.sort_values(["series_id", "t"])
-        sid = pdf["series_id"].to_numpy()
-        codes = np.zeros(sid.shape[0], dtype=np.int64)
-        if sid.shape[0]:
-            codes[1:] = np.cumsum(sid[1:] != sid[:-1])
-        out_rows, out_cps = split_and_run(
-            pdf["t"].to_numpy(),
-            pdf["value"].to_numpy(dtype=np.float64),
-            codes,
-        )
-        return pd.DataFrame(
-            {
-                "series_id": pd.Series(sid[out_rows], dtype=str),
-                "change_point": pd.Series(out_cps, dtype="int64"),
-            }
-        )
-
-    bucketed = (
-        _prepared(series_df)
-        .withColumn("bucket", F.pmod(F.xxhash64("series_id"), F.lit(n_buckets)))
-        .repartition(n_buckets, "bucket")  # AQE-coalesce-proof (see _bucketed)
-    )
-    grouped = bucketed.groupBy("bucket")
-    if arrow and hasattr(grouped, "applyInArrow"):
-        return grouped.applyInArrow(run_arrow, CP_SCHEMA)
-    return grouped.applyInPandas(run_pandas, CP_SCHEMA)
+    return dt
 
 
-def _lockstep_arrow_table(table, lockstep_factory):
-    """Shared Arrow core of the lockstep dispatches: sort a (series_id, t,
-    value) pyarrow Table, dictionary-encode the key, slice per-series numpy
-    views, run the kernel, emit a (series_id, change_point) Table."""
+def _arrow_schema(key_type: str, output: str):
     import pyarrow as pa
-    import pyarrow.compute as pc
 
-    order = pc.sort_indices(
-        table, sort_keys=[("series_id", "ascending"), ("t", "ascending")]
-    )
-    sid = pc.take(table.column("series_id"), order).combine_chunks()
-    t_np = pc.take(table.column("t"), order).combine_chunks().to_numpy()
-    v_np = (
-        pc.take(table.column("value"), order)
-        .combine_chunks()
-        .to_numpy()
-        .astype(np.float64, copy=False)
-    )
-    codes = pc.dictionary_encode(sid).indices.to_numpy()
-    out_rows: list[int] = []
-    out_cps: list[int] = []
-    if codes.shape[0]:
-        bounds = np.flatnonzero(np.diff(codes)) + 1
-        starts = np.concatenate(([0], bounds))
-        ends = np.concatenate((bounds, [codes.shape[0]]))
-        values = [v_np[s:e] for s, e in zip(starts, ends)]
-        all_cps = lockstep_factory().process_many(values)
-        for s, e, cps in zip(starts, ends, all_cps):
-            index = t_np[s:e]
-            for c in cps:
-                if c < index.shape[0]:
-                    out_rows.append(int(s))
-                    out_cps.append(int(index[c]))
-    return pa.table(
-        {
-            "series_id": pc.take(sid, pa.array(out_rows, pa.int64())).cast(
-                pa.string()
-            ),
-            "change_point": pa.array(out_cps, pa.int64()),
-        }
-    )
+    cols = {
+        "cps": [("change_point", pa.int64())],
+        "counts": [("n_change_points", pa.int64())],
+        "metrics": [
+            ("partition_id", pa.int32()),
+            ("n_points", pa.int64()),
+            ("n_change_points", pa.int64()),
+            ("kernel_ms", pa.float64()),
+            ("change_points", pa.list_(pa.int64())),
+        ],
+    }[output]
+    key_pa = pa.string() if key_type == "string" else pa.int64()
+    return pa.schema([("series_id", key_pa), *cols])
 
 
 def detect_lockstep_colocated(
     series_df: DataFrame,
     lockstep_factory: "Callable[[], object]",
-    flush_points: int = 4_000_000,
-    validate: bool = False,
-    key_type: str = "string",
+    output: str = "cps",
 ) -> DataFrame:
-    """ZERO-EXCHANGE lockstep detection over co-located input: the caller
-    asserts every partition holds only COMPLETE series — true for a table
-    bucketed/ingested by the series key (sources/catalog.py
-    write_bucketed_series: pay the shuffle once at ingest) and for any plan
-    downstream of an explicit ``repartition(n, series_id)``. No salt
-    column, no groupBy, no second shuffle (plan-asserted in
-    tests/test_lockstep.py).
+    """ZERO-EXCHANGE detection over co-located ``(series_id, t, value)``
+    input. The caller guarantees every partition holds only COMPLETE series:
+    true downstream of ``events_series(colocate=n)``, of an explicit
+    ``repartition(n, "series_id")`` and of a table bucketed by the key
+    (sources/catalog.py). A violated contract silently detects on partial
+    series — ``colocated.assert_colocated`` is the debug guard. An explicit
+    repartition also keeps AQE's byte-based coalescing from merging the
+    small-but-Python-heavy partitions into a handful.
 
     The per-partition sort runs in the JVM (``sortWithinPartitions`` — a
-    local Tungsten sort, no exchange) and the Python side streams the
-    sorted batches one series at a time (operators/colocated.py), so the
-    partition is never materialized as a second Arrow copy and never
-    sorted in Python — that serde share was the measured bus-bound cost of
-    the round-6 variant (BENCH.md). Series accumulate into lockstep calls
-    of ~``flush_points`` points so the cross-series kernel keeps its
-    amortization while peak memory stays bounded by the flush size, not
-    the partition size.
+    local Tungsten sort, no exchange) and series accumulate into lockstep
+    calls of ~``FLUSH_POINTS`` points. Kernel lanes are independent, so
+    batch composition never changes a series' result. A ``vec`` column in
+    place of ``value`` reaches the kernel as ``(n, dim)`` arrays.
 
-    Per-series output is identical to ``detect_online_lockstep`` for any
-    partitioning that satisfies the contract (kernel lanes are independent;
-    batch composition does not affect results — differential-tested). A
-    VIOLATED contract (series split across partitions) silently detects on
-    partial series: ``validate=True`` runs ``assert_colocated`` first (one
-    debug-mode job; see its docstring) — when unsure and in production,
-    use the salted dispatch.
+    ``output`` selects the rows:
+      - ``"cps"``: ``(series_id, change_point)``, one row per localized
+        change point, positions past the series end dropped;
+      - ``"counts"``: ``(series_id, n_change_points)`` for EVERY series,
+        zero counts included, as raw fire counts — the reference's count
+        mode sums every ``detect()`` fire, so no ``c < len`` guard applies;
+      - ``"metrics"``: ``(series_id, partition_id, n_points,
+        n_change_points, kernel_ms, change_points)`` — one kernel call per
+        series so ``kernel_ms`` is attributable, plus the task partition for
+        per-partition lineage.
+    """
+    from pyspark.sql.pandas.types import from_arrow_schema
 
-    CAUTION with window-derived series (no explicit repartition upstream):
-    AQE's byte-based coalescing may merge the small-but-Python-heavy
-    partitions down to a handful and serialize the kernel — the same trap
-    ``_bucketed`` documents. Explicit-repartition or storage-bucketed
-    inputs are exempt; that is the intended use.
+    from pysatl_cpd_spark.operators.colocated import iter_sorted_series
 
-    ``key_type="long"`` accepts a series_id column of dense int64 codes
-    (operators/keycompact.py — the collision-free key compaction that
-    removes the repeated string column from the Arrow socket bytes) and
-    emits the same type back; re-attach the string id afterwards with
-    ``attach_series_id``."""
-    from pysatl_cpd_spark.operators.colocated import (
-        assert_colocated,
-        iter_sorted_series,
+    if output not in ("cps", "counts", "metrics"):
+        raise ValueError(f"output must be cps|counts|metrics, got {output!r}")
+    key_type = series_key_type(series_df)
+    val = "value" if "value" in series_df.columns else "vec"
+    pruned = series_df.select("series_id", "t", val).sortWithinPartitions(
+        "series_id", "t"
     )
-
-    if key_type not in ("string", "long"):
-        raise ValueError(f"key_type must be string|long, got {key_type!r}")
-    if validate:
-        assert_colocated(series_df)
-    pruned = _prepared(series_df).sortWithinPartitions("series_id", "t")
+    flush_points = FLUSH_POINTS
 
     def run(batches):
-        import pyarrow as pa
+        import time
 
-        key_pa = pa.string() if key_type == "string" else pa.int64()
-        buf: "list[tuple[object, np.ndarray, np.ndarray]]" = []
-        buf_pts = 0
-
-        def flush():
-            nonlocal buf, buf_pts
-            if not buf:
-                return None
-            all_cps = lockstep_factory().process_many([v for _, _, v in buf])
-            ids: list = []
-            cps_out: list[int] = []
-            for (sid, t_np, _), cps in zip(buf, all_cps):
-                for c in cps:
-                    if c < t_np.shape[0]:
-                        ids.append(sid)
-                        cps_out.append(int(t_np[c]))
-            buf, buf_pts = [], 0
-            if not ids:
-                return None
-            return pa.record_batch(
-                [pa.array(ids, key_pa), pa.array(cps_out, pa.int64())],
-                names=["series_id", "change_point"],
-            )
-
-        for sid, cols in iter_sorted_series(batches, ("t", "value")):
-            v = cols["value"].astype(np.float64, copy=False)
-            buf.append((sid, cols["t"], v))
-            buf_pts += v.shape[0]
-            if buf_pts >= flush_points:
-                out = flush()
-                if out is not None:
-                    yield out
-        out = flush()
-        if out is not None:
-            yield out
-
-    return pruned.mapInArrow(run, f"series_id {key_type}, change_point long")
-
-
-def detect_colocated_instrumented(
-    series_df: DataFrame,
-    lockstep_factory: "Callable[[], object]",
-    validate: bool = False,
-    key_type: str = "string",
-) -> DataFrame:
-    """Observability twin of ``detect_lockstep_colocated`` (north-rule:
-    every unit of work emits lineage + metrics): the same ZERO-EXCHANGE
-    streamed dispatch, but each series additionally reports the partition
-    that processed it (``TaskContext.partitionId`` — per-partition lineage
-    for exact resume bookkeeping), its point count, and its kernel wall
-    time. Output: (series_id, partition_id, n_points, n_change_points,
-    kernel_ms, change_points).
-
-    Per-series ``kernel_ms`` requires one kernel call per series, so this
-    dispatch trades the cross-series flush amortization for attribution —
-    the same tradeoff the bucketed instrumented dispatch documents. Use
-    the plain colocated dispatch when only detections are needed."""
-    import time
-
-    from pysatl_cpd_spark.operators.colocated import (
-        assert_colocated,
-        iter_sorted_series,
-    )
-
-    if key_type not in ("string", "long"):
-        raise ValueError(f"key_type must be string|long, got {key_type!r}")
-    if validate:
-        assert_colocated(series_df)
-    pruned = _prepared(series_df).sortWithinPartitions("series_id", "t")
-
-    def run(batches):
         import pyarrow as pa
         from pyspark import TaskContext
 
-        key_pa = pa.string() if key_type == "string" else pa.int64()
+        schema = _arrow_schema(key_type, output)
         ctx = TaskContext.get()
         pid = ctx.partitionId() if ctx is not None else -1
-        out = {k: [] for k in (
-            "series_id", "n_points", "n_change_points", "kernel_ms",
-            "change_points",
-        )}
+        out: "dict[str, list]" = {k: [] for k in schema.names}
+        buf: "list[tuple[object, np.ndarray, np.ndarray]]" = []
+        buf_pts = 0
 
-        def emit():
-            return pa.record_batch(
-                [
-                    pa.array(out["series_id"], key_pa),
-                    pa.array([pid] * len(out["series_id"]), pa.int32()),
-                    pa.array(out["n_points"], pa.int64()),
-                    pa.array(out["n_change_points"], pa.int64()),
-                    pa.array(out["kernel_ms"], pa.float64()),
-                    pa.array(out["change_points"], pa.list_(pa.int64())),
-                ],
-                names=[
-                    "series_id", "partition_id", "n_points",
-                    "n_change_points", "kernel_ms", "change_points",
-                ],
-            )
+        def run_kernel():
+            all_cps = lockstep_factory().process_many([v for _, _, v in buf])
+            for (sid, t_np, _), cps in zip(buf, all_cps):
+                if output == "counts":
+                    out["series_id"].append(sid)
+                    out["n_change_points"].append(len(cps))
+                    continue
+                for c in cps:
+                    if c < t_np.shape[0]:
+                        out["series_id"].append(sid)
+                        out["change_point"].append(int(t_np[c]))
 
-        for sid, cols in iter_sorted_series(batches, ("t", "value")):
+        for sid, cols in iter_sorted_series(batches, ("t", val)):
             t_np = cols["t"]
-            v = cols["value"].astype(np.float64, copy=False)
-            t0 = time.perf_counter()
-            cps = lockstep_factory().process_many([v])[0]
-            kernel_ms = (time.perf_counter() - t0) * 1000.0
-            remapped = [int(t_np[c]) for c in cps if c < t_np.shape[0]]
-            out["series_id"].append(sid)
-            out["n_points"].append(int(v.shape[0]))
-            out["n_change_points"].append(len(remapped))
-            out["kernel_ms"].append(kernel_ms)
-            out["change_points"].append(remapped)
-            if len(out["series_id"]) >= 8192:
-                yield emit()
-                out = {k: [] for k in out}
+            v = cols[val].astype(np.float64, copy=False)
+            if output == "metrics":
+                t0 = time.perf_counter()
+                cps = lockstep_factory().process_many([v])[0]
+                kernel_ms = (time.perf_counter() - t0) * 1000.0
+                remapped = [int(t_np[c]) for c in cps if c < t_np.shape[0]]
+                for k, x in (
+                    ("series_id", sid), ("partition_id", pid),
+                    ("n_points", int(v.shape[0])),
+                    ("n_change_points", len(remapped)),
+                    ("kernel_ms", kernel_ms), ("change_points", remapped),
+                ):
+                    out[k].append(x)
+            else:
+                buf.append((sid, t_np, v))
+                buf_pts += v.shape[0]
+                if buf_pts >= flush_points:
+                    run_kernel()
+                    buf, buf_pts = [], 0
+            if len(out["series_id"]) >= FLUSH_ROWS:
+                yield pa.RecordBatch.from_pydict(out, schema=schema)
+                out = {k: [] for k in schema.names}
+        if buf:
+            run_kernel()
         if out["series_id"]:
-            yield emit()
+            yield pa.RecordBatch.from_pydict(out, schema=schema)
 
-    return pruned.mapInArrow(
-        run,
-        f"series_id {key_type}, partition_id int, n_points long, "
-        "n_change_points long, kernel_ms double, change_points array<long>",
-    )
+    return pruned.mapInArrow(run, from_arrow_schema(_arrow_schema(key_type, output)))
 
 
-def detect_offline_lockstep(
-    series_df: DataFrame,
-    lockstep_factory: "Callable[[], object]",
-    n_buckets: int | None = None,
-) -> DataFrame:
-    """Offline twin of ``detect_online_lockstep``: the kernel contract is the
-    same ``process_many(list[np.ndarray]) -> list[list[int]]`` over complete
-    series either way (offline kernels see the whole series at once, which is
-    exactly what the lockstep dispatch delivers), so this is the identical
-    salted-bucket grouped-map plan. Use with ``LockstepCusum`` for the
-    bit-identical batched ``CusumDetector`` path (detectors/cusum.py §3)."""
-    return detect_online_lockstep(series_df, lockstep_factory, n_buckets)
+# -- adapters: every detector shape as a lockstep kernel ---------------------
 
 
-def detect_online_instrumented(
-    series_df: DataFrame,
-    algorithm_factory: Callable[[], SeriesAlgorithm],
-    n_buckets: int | None = None,
-) -> DataFrame:
-    """Online detection with per-series metrics rows (north-rule observability:
-    every unit of work emits lineage + metrics). Output:
-    (series_id, n_points, n_change_points, kernel_ms, change_points array).
+class _PerSeries:
+    def __init__(self, detect: "Callable[[np.ndarray], list[int]]"):
+        self.detect = detect
 
-    BUCKETED dispatch (round 7): one grouped-map call carries a whole salt
-    bucket of complete series instead of one UDF call per series — the exact
-    per-group Arrow/scheduling overhead ``_bucketed`` documents (0.09 s of
-    kernel inside 4.3 s of dispatch on the main path). ``kernel_ms`` stays
-    PER-SERIES: the kernel call is timed around each series inside the
-    bucket, so the observability contract is unchanged (parity vs the
-    per-series dispatch asserted in tests/test_instrumented.py; only the
-    timing column is dispatch-dependent by nature). ``n_buckets=0`` opts out
-    of salting for co-located input (same contract as ``_bucketed``)."""
-    import time
-
-    def run(pdf: pd.DataFrame) -> pd.DataFrame:
-        pdf = pdf.sort_values(["series_id", "t"])
-        out = {
-            "series_id": [], "n_points": [], "n_change_points": [],
-            "kernel_ms": [], "change_points": [],
-        }
-        for sid, grp in pdf.groupby("series_id", sort=False):
-            values = grp["value"].to_numpy(dtype=np.float64)
-            index = grp["t"].to_numpy()
-            t0 = time.perf_counter()
-            cps = algorithm_factory().process_series(values)
-            kernel_ms = (time.perf_counter() - t0) * 1000.0
-            cps = [int(index[c]) for c in cps if c < len(index)]
-            out["series_id"].append(sid)
-            out["n_points"].append(len(values))
-            out["n_change_points"].append(len(cps))
-            out["kernel_ms"].append(kernel_ms)
-            out["change_points"].append(cps)
-        return pd.DataFrame(out)
-
-    bucketed, nb = _bucketed(series_df, n_buckets)
-    key = "series_id" if nb == 0 else "bucket"
-    return bucketed.groupBy(key).applyInPandas(
-        run,
-        "series_id string, n_points long, n_change_points long, "
-        "kernel_ms double, change_points array<long>",
-    )
+    def process_many(self, values: "list[np.ndarray]") -> "list[list[int]]":
+        return [list(self.detect(v)) for v in values]
 
 
-def detect_counts(
-    series_df: DataFrame,
-    algorithm_factory: Callable[[], SeriesAlgorithm],
-    n_buckets: int | None = None,
-) -> DataFrame:
-    """Detection-count mode (reference CpdCore.detect / OnlineCpdSolver.run
-    detect path): per-series count of change points."""
-
-    def run(pdf: pd.DataFrame) -> pd.DataFrame:
-        pdf = pdf.sort_values(["series_id", "t"])
-        ids: list[str] = []
-        counts: list[int] = []
-        for sid, grp in pdf.groupby("series_id", sort=False):
-            values = grp["value"].to_numpy(dtype=np.float64)
-            ids.append(sid)
-            counts.append(len(algorithm_factory().process_series(values)))
-        return pd.DataFrame(
-            {
-                "series_id": pd.Series(ids, dtype=str),
-                "n_change_points": pd.Series(counts, dtype="int64"),
-            }
-        )
-
-    bucketed, nb = _bucketed(series_df, n_buckets)
-    key = "series_id" if nb == 0 else "bucket"
-    return bucketed.groupBy(key).applyInPandas(
-        run, "series_id string, n_change_points long"
-    )
+def per_series(detect: "Callable[[np.ndarray], list[int]]") -> "Callable[[], _PerSeries]":
+    """Sequential detector -> lockstep factory for the one dispatch.
+    ``detect`` maps one series' values to positions and builds a fresh
+    detector per call, e.g. ``per_series(lambda v: CusumDetector().localize(v))``
+    or ``per_series(lambda v: make_online().process_series(v))``."""
+    return partial(_PerSeries, detect)
 
 
-def detect_counts_lockstep(
-    series_df: DataFrame,
-    lockstep_factory: "Callable[[], object]",
-    n_buckets: int | None = None,
-) -> DataFrame:
-    """Detection-count mode through the LOCKSTEP batch kernel: the salted
-    dispatch of ``detect_online_lockstep`` (same AQE-proof bucket
-    repartition), but each bucket emits ONE ``(series_id, n_change_points)``
-    row per series — including zero-count series, which a groupBy-count over
-    the change-point rows would silently drop. Counts are RAW FIRE COUNTS,
-    ``len(sequential.process_series(values))`` exactly (the kernel is
-    bit-identical per series): the reference's count mode sums every
-    ``detect()`` fire, so — unlike the LOCALIZED dispatches — no
-    ``c < len`` index guard is applied here, matching ``detect_counts``. A
-    posterior-collapse fire at a series' final observation (localizes past
-    the end; only reachable with overflow-magnitude values) therefore
-    counts, as it does sequentially. Falls back to a pandas grouped-map
-    (identical output) when ``applyInArrow`` is unavailable (Spark < 4),
-    like ``detect_online_lockstep``."""
-    spark = series_df.sparkSession
-    if n_buckets is None:
-        n_buckets = 2 * spark.sparkContext.defaultParallelism
-    if n_buckets <= 0:
-        raise ValueError("detect_counts_lockstep requires n_buckets >= 1")
+def windowed(
+    algorithm_factory: "Callable[[], object]",
+    window_length: int = 100,
+    shift_factor: float = 1.0 / 3.0,
+) -> "Callable[[], _PerSeries]":
+    """Offline detector over scrubber windows (the reference CpdCore.localize
+    composition) as a kernel: each series is sliced in numpy by the
+    LinearScrubber law of ``assign_windows`` — window k covers positions
+    [k*shift, k*shift + window_length), trailing partial windows included —
+    a fresh detector localizes each window, and the window-local detections
+    come back as sorted DISTINCT series positions (overlapping windows
+    re-detect the same point)."""
+    shift = max(1, int(window_length * shift_factor))
 
-    def count_runs(v_np, codes):
-        """Sorted values + series codes -> (first-row offsets, fire counts)."""
-        out_rows: list[int] = []
-        out_counts: list[int] = []
-        if codes.shape[0]:
-            bounds = np.flatnonzero(np.diff(codes)) + 1
-            starts = np.concatenate(([0], bounds))
-            ends = np.concatenate((bounds, [codes.shape[0]]))
-            values = [v_np[s:e] for s, e in zip(starts, ends)]
-            all_cps = lockstep_factory().process_many(values)
-            for s, cps in zip(starts, all_cps):
-                out_rows.append(int(s))
-                out_counts.append(len(cps))
-        return out_rows, out_counts
+    def detect(values: np.ndarray) -> "list[int]":
+        found: "set[int]" = set()
+        for start in range(0, values.shape[0], shift):
+            window = values[start:start + window_length]
+            found.update(start + int(c) for c in algorithm_factory().localize(window))
+        return sorted(found)
 
-    def run_arrow(table):
-        import pyarrow as pa
-        import pyarrow.compute as pc
-
-        order = pc.sort_indices(
-            table, sort_keys=[("series_id", "ascending"), ("t", "ascending")]
-        )
-        sid = pc.take(table.column("series_id"), order).combine_chunks()
-        v_np = (
-            pc.take(table.column("value"), order)
-            .combine_chunks()
-            .to_numpy()
-            .astype(np.float64, copy=False)
-        )
-        codes = pc.dictionary_encode(sid).indices.to_numpy()
-        out_rows, out_counts = count_runs(v_np, codes)
-        return pa.table(
-            {
-                "series_id": pc.take(sid, pa.array(out_rows, pa.int64())).cast(
-                    pa.string()
-                ),
-                "n_change_points": pa.array(out_counts, pa.int64()),
-            }
-        )
-
-    def run_pandas(pdf: pd.DataFrame) -> pd.DataFrame:
-        pdf = pdf.sort_values(["series_id", "t"])
-        sid = pdf["series_id"].to_numpy()
-        codes = np.zeros(sid.shape[0], dtype=np.int64)
-        if sid.shape[0]:
-            codes[1:] = np.cumsum(sid[1:] != sid[:-1])
-        out_rows, out_counts = count_runs(
-            pdf["value"].to_numpy(dtype=np.float64), codes
-        )
-        return pd.DataFrame(
-            {
-                "series_id": pd.Series(sid[out_rows], dtype=str),
-                "n_change_points": pd.Series(out_counts, dtype="int64"),
-            }
-        )
-
-    bucketed = (
-        _prepared(series_df)
-        .withColumn("bucket", F.pmod(F.xxhash64("series_id"), F.lit(n_buckets)))
-        .repartition(n_buckets, "bucket")  # AQE-coalesce-proof (see _bucketed)
-    )
-    grouped = bucketed.groupBy("bucket")
-    schema = "series_id string, n_change_points long"
-    if hasattr(grouped, "applyInArrow"):
-        return grouped.applyInArrow(run_arrow, schema)
-    return grouped.applyInPandas(run_pandas, schema)
-
-
-def detect_offline_multivariate(
-    series_df: DataFrame,
-    algorithm_factory: Callable[[], WindowAlgorithm],
-    n_buckets: int | None = None,
-) -> DataFrame:
-    """Multivariate variant: series_df is (series_id, t, vec array<double>).
-    The group matrix (n, dim) feeds detectors that accept vector observations
-    (classification / kNN / graph families)."""
-    spark = series_df.sparkSession
-    if n_buckets is None:
-        n_buckets = 2 * spark.sparkContext.defaultParallelism
-
-    def run(pdf: pd.DataFrame) -> pd.DataFrame:
-        pdf = pdf.sort_values(["series_id", "t"])
-        out_ids: list[str] = []
-        out_cps: list[int] = []
-        for sid, grp in pdf.groupby("series_id", sort=False):
-            values = np.stack(grp["vec"].to_numpy())
-            index = grp["t"].to_numpy()
-            for c in algorithm_factory().localize(values):
-                out_ids.append(sid)
-                out_cps.append(int(index[c]))
-        return pd.DataFrame(
-            {
-                "series_id": pd.Series(out_ids, dtype=str),
-                "change_point": pd.Series(out_cps, dtype="int64"),
-            }
-        )
-
-    pruned = series_df.select("series_id", "t", "vec")
-    if n_buckets == 0:  # co-located input (see _bucketed): no salt shuffle
-        return pruned.groupBy("series_id").applyInPandas(run, CP_SCHEMA)
-    pruned = pruned.withColumn(
-        "bucket", F.pmod(F.xxhash64("series_id"), F.lit(n_buckets))
-    ).repartition(n_buckets, "bucket")  # AQE-coalesce-proof (see _bucketed)
-    return pruned.groupBy("bucket").applyInPandas(run, CP_SCHEMA)
+    return per_series(detect)
 
 
 # -- scrubber: overlapping sliding windows as a relational transform ---------
@@ -710,7 +231,9 @@ def assign_windows(
     """
     shift = max(1, int(window_length * shift_factor))
     w = W.partitionBy("series_id").orderBy("t")
-    with_pos = _prepared(series_df).withColumn("pos", F.row_number().over(w) - F.lit(1))
+    with_pos = series_df.select("series_id", "t", "value").withColumn(
+        "pos", F.row_number().over(w) - F.lit(1)
+    )
     k_min = F.greatest(
         F.lit(0),
         F.ceil((F.col("pos") - F.lit(window_length - 1)) / F.lit(shift)).cast("long"),
@@ -719,50 +242,6 @@ def assign_windows(
     return with_pos.withColumn(
         "window_id", F.explode(F.sequence(k_min, k_max))
     ).select("series_id", "window_id", "pos", "t", "value")
-
-
-def detect_windowed(
-    series_df: DataFrame,
-    algorithm_factory: Callable[[], WindowAlgorithm],
-    window_length: int = 100,
-    shift_factor: float = 1.0 / 3.0,
-    dedupe: bool = True,
-) -> DataFrame:
-    """Offline detector over scrubber windows (the reference CpdCore.localize
-    composition): window-local detections are remapped via the carried global
-    index and concatenated; overlapping windows re-detect the same point, so
-    ``dedupe`` keeps one row per (series_id, change_point). Windows are
-    salt-bucketed many-per-UDF-call (the scrubber emits FAR more window
-    groups than series — per-group dispatch dominated)."""
-    windows = assign_windows(series_df, window_length, shift_factor)
-    spark = series_df.sparkSession
-    n_buckets = 2 * spark.sparkContext.defaultParallelism
-
-    def run(pdf: pd.DataFrame) -> pd.DataFrame:
-        pdf = pdf.sort_values(["series_id", "window_id", "pos"])
-        out_ids: list[str] = []
-        out_cps: list[int] = []
-        for (sid, _wid), grp in pdf.groupby(
-            ["series_id", "window_id"], sort=False
-        ):
-            values = grp["value"].to_numpy(dtype=np.float64)
-            index = grp["t"].to_numpy()
-            for c in algorithm_factory().localize(values):
-                out_ids.append(sid)
-                out_cps.append(int(index[c]))
-        return pd.DataFrame(
-            {
-                "series_id": pd.Series(out_ids, dtype=str),
-                "change_point": pd.Series(out_cps, dtype="int64"),
-            }
-        )
-
-    bucketed = windows.withColumn(
-        "bucket",
-        F.pmod(F.xxhash64("series_id", "window_id"), F.lit(n_buckets)),
-    ).repartition(n_buckets, "bucket")  # AQE-coalesce-proof (see _bucketed)
-    out = bucketed.groupBy("bucket").applyInPandas(run, CP_SCHEMA)
-    return out.distinct() if dedupe else out
 
 
 # -- skew: chunk + overlap + stitch ------------------------------------------
@@ -775,11 +254,14 @@ def chunk_series(
 ) -> DataFrame:
     """Split each series into overlapping chunks for hot-key (skew) handling:
     chunk c covers dense positions [c*(chunk_size-overlap), ... + chunk_size).
-    Group key becomes (series_id, chunk_id) so a 10^6-turn conversation fans
-    out over many tasks instead of pinning one.
+    The chunk id is folded into the key (``series_id = "<id>#<chunk_id>"``)
+    and the result is repartitioned by it, so it is co-located input for
+    ``detect_lockstep_colocated`` and a 10^6-turn conversation fans out over
+    many tasks instead of pinning one. ``unchunk`` maps the detections back;
+    ``pos`` and ``chunk_id`` stay as columns.
 
-    WHEN TO CHUNK (measured crossover, scripts/chunk_crossover.py, BENCH.md
-    round-9 table, local[32], chunk_size=200k/overlap=2k, rare-alarm CUSUM):
+    WHEN TO CHUNK (measured crossover, BENCH.md round-9 table, local[32],
+    chunk_size=200k/overlap=2k, rare-alarm CUSUM):
     the single colocated lane wins below ~250k points (0.36 s vs 0.48 s —
     the explode+shuffle overhead exceeds the fan-out gain), the arms cross
     between 250k and 500k (0.94 vs 0.78 at 500k), and past ~1M the chunked
@@ -795,38 +277,25 @@ def chunk_series(
         raise ValueError("overlap must be < chunk_size")
     step = chunk_size - overlap
     w = W.partitionBy("series_id").orderBy("t")
-    with_pos = _prepared(series_df).withColumn("pos", F.row_number().over(w) - F.lit(1))
+    with_pos = series_df.select("series_id", "t", "value").withColumn(
+        "pos", F.row_number().over(w) - F.lit(1)
+    )
     c_min = F.greatest(
         F.lit(0),
         F.ceil((F.col("pos") - F.lit(chunk_size - 1)) / F.lit(step)).cast("long"),
     )
     c_max = F.floor(F.col("pos") / F.lit(step)).cast("long")
-    return with_pos.withColumn("chunk_id", F.explode(F.sequence(c_min, c_max)))
-
-
-def detect_offline_chunked(
-    series_df: DataFrame,
-    algorithm_factory: Callable[[], WindowAlgorithm],
-    chunk_size: int = 20000,
-    overlap: int = 500,
-) -> DataFrame:
-    """Offline detection with hot-key chunking. Detections are absolute
-    (remapped through the carried t), so stitching = distinct on (series, t)."""
-    chunks = chunk_series(series_df, chunk_size, overlap)
-
-    def run(pdf: pd.DataFrame) -> pd.DataFrame:
-        pdf = pdf.sort_values("pos")
-        values = pdf["value"].to_numpy(dtype=np.float64)
-        index = pdf["t"].to_numpy()
-        cps = algorithm_factory().localize(values)
-        return pd.DataFrame(
-            {"series_id": pdf["series_id"].iloc[0], "change_point": index[cps]}
-            if cps
-            else {"series_id": pd.Series([], dtype=str), "change_point": pd.Series([], dtype="int64")}
-        )
-
     return (
-        chunks.groupBy("series_id", "chunk_id")
-        .applyInPandas(run, CP_SCHEMA)
-        .distinct()
+        with_pos.withColumn("chunk_id", F.explode(F.sequence(c_min, c_max)))
+        .withColumn("series_id", F.concat_ws("#", "series_id", "chunk_id"))
+        .repartition(series_df.sparkSession.sparkContext.defaultParallelism, "series_id")
     )
+
+
+def unchunk(cps_df: DataFrame) -> DataFrame:
+    """Stitch chunked detections: strip the ``#<chunk_id>`` key suffix and
+    keep one row per (series_id, change_point) — detections are absolute
+    (remapped through the carried t), so overlap re-detections coincide."""
+    return cps_df.withColumn(
+        "series_id", F.regexp_extract("series_id", r"^(.*)#\d+$", 1)
+    ).distinct()

@@ -15,10 +15,10 @@ does the lossless version:
     (``monotonically_increasing_id`` is not: a cache eviction could
     recompute a permuted mapping while downstream frames retain old codes —
     silent corruption);
-  - stream only ``(code, t, value)`` through the UDF boundary
-    (``detect_lockstep_colocated(key_type="long")`` /
-    ``encode_segments_colocated(key_type="long")`` — the int key also skips
-    the per-batch dictionary hash in ``iter_sorted_series``);
+  - stream only ``(code, t, value)`` through the UDF boundary — the
+    co-located ``detect_lockstep_colocated`` / ``encode_segments_colocated``
+    read the bigint key type from the schema and emit it back; the int key
+    also skips the per-batch dictionary hash in ``iter_sorted_series``;
   - re-attach the string id afterwards via a broadcast join of the dim
     table — zero collision probability, output rows identical.
 
@@ -62,8 +62,8 @@ def compact_series_key(
     """Replace the string ``series_id`` with its dense int64 code and pay the
     ONE co-location shuffle on the (cheaper-to-hash) int key. Returns
     ``(coded, dim)``: coded is (series_id:int64, t, value) repartitioned by
-    the code — ready for the zero-exchange colocated dispatches with
-    ``key_type="long"`` — and dim maps the codes back.
+    the code — ready for the zero-exchange colocated dispatches, which take
+    the bigint key as is — and dim maps the codes back.
 
     The broadcast dim join runs BEFORE the repartition, so the coded frame's
     partitioning is on the int code itself (a join after the repartition

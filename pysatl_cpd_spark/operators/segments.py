@@ -1,458 +1,189 @@
-"""CPD-adaptive segmentation + Gorilla materialization.
+"""CPD-adaptive segmentation + Gorilla materialization on the co-located runner.
 
-Segments are the half-open stretches between detected change points. The
-segment id assignment is relational (marker join + running sum — one shuffle,
-no UDF); only the codec itself runs in a grouped pandas UDF, emitting one
-compressed blob + summary row per segment. decode_segments reverses the codec
-for verification, proving the per-row invariant decode(encode(s)) == s.
+Segments are the half-open stretches between detected change points. Encode
+and the fused codec round-trip run on the same dispatch as detection
+(operators/cpd.py): co-located input, a local JVM sort, one ``mapInArrow``
+pass that streams each partition ONE SERIES AT A TIME
+(operators/colocated.py). ``assign_segments`` is the relational segment-id
+law (marker join + running sum, no UDF) and ``decode_segments`` reverses the
+codec for verification, proving the per-row invariant decode(encode(s)) == s.
 """
 
 from __future__ import annotations
 
 import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame, Window as W, functions as F
 
-from pysatl_cpd_spark.operators.gorilla import decode_segment, encode_segment
+from pysatl_cpd_spark.operators.cpd import series_key_type
+from pysatl_cpd_spark.operators.gorilla import encode_segment
 
-SEGMENT_SCHEMA = (
-    "series_id string, segment_id long, n_points long, "
-    "t_min long, t_max long, min_value double, max_value double, "
-    "first_value double, last_value double, blob binary"
+SUMMARY_COLS = (
+    "series_id", "segment_id", "n_points", "t_min", "t_max",
+    "min_value", "max_value", "first_value", "last_value",
 )
+# segments buffered per emitted Arrow batch (and per batched decode)
+FLUSH_SEGMENTS = 8192
+
+
+def _markers(cps_df: DataFrame) -> DataFrame:
+    return cps_df.select(
+        "series_id", F.col("change_point").alias("t"), F.lit(1).alias("_cp")
+    ).distinct()
 
 
 def assign_segments(series_df: DataFrame, cps_df: DataFrame) -> DataFrame:
     """series (series_id, t, value) × change points (series_id, change_point)
     → + segment_id: number of change points at or before t."""
-    markers = (
-        cps_df.select(
-            "series_id", F.col("change_point").alias("t"), F.lit(1).alias("_cp")
-        )
-        .distinct()
-    )
-    joined = series_df.join(markers, on=["series_id", "t"], how="left")
+    joined = series_df.join(_markers(cps_df), on=["series_id", "t"], how="left")
     run = W.partitionBy("series_id").orderBy("t").rowsBetween(W.unboundedPreceding, 0)
     return joined.withColumn(
         "segment_id", F.coalesce(F.sum("_cp").over(run), F.lit(0)).cast("long")
     ).drop("_cp")
 
 
-def encode_segments(segmented: DataFrame, bundles: int | None = None) -> DataFrame:
-    """(series_id, t, value, segment_id) → one Gorilla blob + summary per
-    segment. ``t`` doubles as the int64 timestamp stream. Segments are
-    BUNDLED ``bundles`` ways (hash of the segment key) so one Arrow batch
-    carries many segments — per-group dispatch dominated the codec at
-    per-segment grouping (same rationale as encode_segments_adaptive).
-    Default bundle count = 2x parallelism: full occupancy without slicing
-    small jobs into hundreds of near-empty tasks."""
-    if bundles is None:
-        bundles = 2 * segmented.sparkSession.sparkContext.defaultParallelism
-
-    def run(pdf: pd.DataFrame) -> pd.DataFrame:
-        pdf = pdf.sort_values(["series_id", "segment_id", "t"])
-        rows = []
-        for (sid, seg), grp in pdf.groupby(["series_id", "segment_id"], sort=False):
-            ts = grp["t"].to_numpy(dtype=np.int64)
-            values = grp["value"].to_numpy(dtype=np.float64)
-            rows.append(
-                (
-                    sid,
-                    int(seg),
-                    len(ts),
-                    int(ts[0]),
-                    int(ts[-1]),
-                    float(np.min(values)),
-                    float(np.max(values)),
-                    float(values[0]),
-                    float(values[-1]),
-                    encode_segment(ts, values),
-                )
-            )
-        out = pd.DataFrame(
-            rows,
-            columns=[
-                "series_id", "segment_id", "n_points", "t_min", "t_max",
-                "min_value", "max_value", "first_value", "last_value", "blob",
-            ],
-        )
-        if not rows:  # typed empty frame for Arrow
-            for c, dt in (
-                ("segment_id", "int64"), ("n_points", "int64"),
-                ("t_min", "int64"), ("t_max", "int64"),
-                ("min_value", "float64"), ("max_value", "float64"),
-                ("first_value", "float64"), ("last_value", "float64"),
-            ):
-                out[c] = out[c].astype(dt)
-        return out
-
-    pruned = (
-        segmented.select("series_id", "segment_id", "t", "value")
-        .withColumn(
-            "bundle",
-            F.pmod(F.xxhash64("series_id", "segment_id"), F.lit(bundles)),
-        )
-        # explicit repartition: exempt from AQE byte-coalescing, which would
-        # serialize this Python-CPU-bound stage (see cpd._bucketed)
-        .repartition(bundles, "bundle")
-    )
-    return pruned.groupBy("bundle").applyInPandas(run, SEGMENT_SCHEMA)
+def _summarize(out: "dict[str, list]", sid, seg_id: int, ts, vals) -> None:
+    for k, x in zip(SUMMARY_COLS, (
+        sid, seg_id, int(ts.shape[0]), int(ts[0]), int(ts[-1]),
+        float(np.min(vals)), float(np.max(vals)), float(vals[0]), float(vals[-1]),
+    )):
+        out[k].append(x)
 
 
-def encode_segments_adaptive(
-    series_df: DataFrame, cps_df: DataFrame, bundles: int = 256
-) -> DataFrame:
-    """Fused assign_segments + encode_segments: change-point markers arrive
-    via a broadcast join (no shuffle — cps_df is tiny relative to the
-    series), and the segment split happens vectorized inside a grouped UDF.
+def _schema(key_type: str, blob: bool):
+    import pyarrow as pa
 
-    Series are BUNDLED ``bundles`` ways (group key = hash(series_id) mod
-    bundles) instead of grouped per series: Arrow ships one batch per
-    *bundle*, so the per-group pandas/serde overhead (~ms) amortizes over
-    many series — at millions of 400-turn conversations, per-series groups
-    spend more time in group plumbing than in the codec. Inside the UDF the
-    bundle is sorted once by (series_id, t) and split on series boundaries
-    + markers with numpy. One shuffle for the whole stage, same output."""
-    from pyspark.sql import functions as F
+    types = [pa.string() if key_type == "string" else pa.int64()]
+    types += [pa.int64()] * 4 + [pa.float64()] * 4
+    fields = list(zip(SUMMARY_COLS, types))
+    return pa.schema(fields + [("blob", pa.binary())] if blob else fields)
 
-    markers = (
-        cps_df.select(
-            "series_id", F.col("change_point").alias("t"), F.lit(1).alias("_cp")
-        )
-        .distinct()
-    )
-    # explicit repartition by bundle: the UDF stage is Python-cost-bound,
-    # and AQE's byte-based coalescing would shrink a small-but-CPU-heavy
-    # shuffle to a handful of tasks; a user-specified partition count is
-    # exempt from coalescing and already satisfies the groupBy distribution
+
+def encode_segments_colocated(series_df: DataFrame, cps_df: DataFrame) -> DataFrame:
+    """ZERO-EXCHANGE segment encode over CO-LOCATED series (the contract of
+    ``cpd.detect_lockstep_colocated``): one Gorilla blob + summary row per
+    segment, ``SUMMARY_COLS`` + ``blob`` (``_schema``) with the input's
+    ``series_id`` type. ``t`` doubles as the int64 timestamp stream.
+
+    The change-point markers arrive by broadcast join (no shuffle — the
+    streamed side of a BroadcastHashJoin keeps its partitioning and row
+    order), the JVM sorts each partition locally, and the Python side
+    streams one series at a time: peak memory is one series plus
+    ``FLUSH_SEGMENTS`` output rows. Segment id = running count of markers
+    at or before the row, as ``assign_segments`` (a marker on a series'
+    first row labels it segment 1)."""
+    from pyspark.sql.pandas.types import from_arrow_schema
+
+    from pysatl_cpd_spark.operators.colocated import iter_sorted_series
+
+    key_type = series_key_type(series_df)
     joined = (
         series_df.select("series_id", "t", "value")
-        .join(F.broadcast(markers), on=["series_id", "t"], how="left")
-        .withColumn("_bundle", F.pmod(F.hash("series_id"), F.lit(bundles)))
-        .repartition(bundles, "_bundle")
-    )
-
-    def run(pdf: pd.DataFrame) -> pd.DataFrame:
-        pdf = pdf.sort_values(["series_id", "t"], kind="mergesort")
-        sids = pdf["series_id"].to_numpy()
-        ts = pdf["t"].to_numpy(dtype=np.int64)
-        values = pdf["value"].to_numpy(dtype=np.float64)
-        cp = pdf["_cp"].fillna(0).to_numpy(dtype=np.int64)
-        # series boundaries reset the running segment counter
-        new_series = np.empty(len(sids), dtype=bool)
-        new_series[0] = True
-        new_series[1:] = sids[1:] != sids[:-1]
-        out = {k: [] for k in (
-            "series_id", "segment_id", "n_points", "t_min", "t_max",
-            "min_value", "max_value", "first_value", "last_value", "blob",
-        )}
-        # split where a new series starts or a change point lands; segment id
-        # = within-series running count of markers (cumsum semantics, so a
-        # marker on a series' first row labels it segment 1, as before)
-        bounds = np.flatnonzero(new_series[1:] | (cp[1:] == 1)) + 1
-        cum = np.cumsum(cp)
-        base = 0
-        for lo, hi in zip(
-            np.concatenate([[0], bounds]), np.concatenate([bounds, [len(sids)]])
-        ):
-            if new_series[lo]:
-                base = int(cum[lo]) - int(cp[lo])
-            seg_id = int(cum[lo]) - base
-            seg_ts, seg_vals = ts[lo:hi], values[lo:hi]
-            out["series_id"].append(sids[lo])
-            out["segment_id"].append(seg_id)
-            out["n_points"].append(hi - lo)
-            out["t_min"].append(int(seg_ts[0]))
-            out["t_max"].append(int(seg_ts[-1]))
-            out["min_value"].append(float(np.min(seg_vals)))
-            out["max_value"].append(float(np.max(seg_vals)))
-            out["first_value"].append(float(seg_vals[0]))
-            out["last_value"].append(float(seg_vals[-1]))
-            out["blob"].append(encode_segment(seg_ts, seg_vals))
-        return pd.DataFrame(out)
-
-    return joined.groupBy("_bundle").applyInPandas(run, SEGMENT_SCHEMA)
-
-
-def encode_segments_colocated(
-    series_df: DataFrame,
-    cps_df: DataFrame,
-    flush_segments: int = 8192,
-    validate: bool = False,
-    key_type: str = "string",
-) -> DataFrame:
-    """ZERO-EXCHANGE twin of ``encode_segments_adaptive`` for CO-LOCATED
-    series (every partition holds complete series — a bucket-ingested table
-    or any plan downstream of an explicit ``repartition(n, series_id)``,
-    same contract as cpd.detect_lockstep_colocated; ``validate=True`` runs
-    the debug-mode ``assert_colocated`` guard first). The change-point
-    markers arrive by broadcast join (no shuffle, partitioning preserved —
-    the streamed side of a BroadcastHashJoin keeps both its partitioning
-    and its row order) and each partition encodes its own series in one
-    mapInArrow pass — the bundle repartition that dominated the adaptive
-    variant's wall time at scale (the codec itself is ~260k pts/s/core; the
-    9.6M-row shuffle was the cost) disappears.
-
-    The per-partition sort runs in the JVM (``sortWithinPartitions`` after
-    the join — local, no exchange) and the Python side streams the sorted
-    batches ONE SERIES AT A TIME (operators/colocated.py): the round-6
-    variant's whole-partition Arrow copy + Python sort + per-column take
-    copies are gone, and since every segment is independent the encoder is
-    fully streaming — peak memory is one series plus ~``flush_segments``
-    output rows. Blobs are byte-identical to the adaptive/"plain" variants
-    (same encode_segment per segment; parity-tested)."""
-    from pysatl_cpd_spark.operators.colocated import (
-        assert_colocated,
-        iter_sorted_series,
-    )
-
-    if key_type not in ("string", "long"):
-        raise ValueError(f"key_type must be string|long, got {key_type!r}")
-    if validate:
-        assert_colocated(series_df)
-    markers = (
-        cps_df.select(
-            "series_id", F.col("change_point").alias("t"), F.lit(1).alias("_cp")
-        )
-        .distinct()
-    )
-    joined = (
-        series_df.select("series_id", "t", "value")
-        .join(F.broadcast(markers), on=["series_id", "t"], how="left")
+        .join(F.broadcast(_markers(cps_df)), on=["series_id", "t"], how="left")
         .sortWithinPartitions("series_id", "t")
     )
 
-    _OUT_COLS = (
-        "series_id", "segment_id", "n_points", "t_min", "t_max",
-        "min_value", "max_value", "first_value", "last_value", "blob",
-    )
-
-    def _emit(out):
+    def run(batches):
         import pyarrow as pa
 
-        key_pa = pa.string() if key_type == "string" else pa.int64()
-        return pa.record_batch(
-            [
-                pa.array(out["series_id"], key_pa),
-                pa.array(out["segment_id"], pa.int64()),
-                pa.array(out["n_points"], pa.int64()),
-                pa.array(out["t_min"], pa.int64()),
-                pa.array(out["t_max"], pa.int64()),
-                pa.array(out["min_value"], pa.float64()),
-                pa.array(out["max_value"], pa.float64()),
-                pa.array(out["first_value"], pa.float64()),
-                pa.array(out["last_value"], pa.float64()),
-                pa.array(out["blob"], pa.binary()),
-            ],
-            names=list(_OUT_COLS),
-        )
-
-    def run(batches):
-        out = {k: [] for k in _OUT_COLS}
-        n_out = 0
+        schema = _schema(key_type, blob=True)
+        out: "dict[str, list]" = {k: [] for k in schema.names}
         for sid, cols in iter_sorted_series(batches, ("t", "value", "_cp")):
             ts = cols["t"]
             values = cols["value"].astype(np.float64, copy=False)
             cp = cols["_cp"]
-            # identical split/segment-id law to encode_segments_adaptive.run,
-            # expressed per series: within one series the running base is the
-            # cumsum before its first row, i.e. 0 — segment_id = cum[lo]
             bounds = np.flatnonzero(cp[1:] == 1) + 1
             cum = np.cumsum(cp, dtype=np.int64)
-            n = ts.shape[0]
             for lo, hi in zip(
-                np.concatenate([[0], bounds]), np.concatenate([bounds, [n]])
+                np.concatenate([[0], bounds]), np.concatenate([bounds, [ts.shape[0]]])
             ):
-                seg_ts, seg_vals = ts[lo:hi], values[lo:hi]
-                out["series_id"].append(sid)
-                out["segment_id"].append(int(cum[lo]))
-                out["n_points"].append(int(hi - lo))
-                out["t_min"].append(int(seg_ts[0]))
-                out["t_max"].append(int(seg_ts[-1]))
-                out["min_value"].append(float(np.min(seg_vals)))
-                out["max_value"].append(float(np.max(seg_vals)))
-                out["first_value"].append(float(seg_vals[0]))
-                out["last_value"].append(float(seg_vals[-1]))
-                out["blob"].append(encode_segment(seg_ts, seg_vals))
-                n_out += 1
-            if n_out >= flush_segments:
-                yield _emit(out)
-                out = {k: [] for k in _OUT_COLS}
-                n_out = 0
-        if n_out:
-            yield _emit(out)
+                _summarize(out, sid, int(cum[lo]), ts[lo:hi], values[lo:hi])
+                out["blob"].append(encode_segment(ts[lo:hi], values[lo:hi]))
+            if len(out["blob"]) >= FLUSH_SEGMENTS:
+                yield pa.RecordBatch.from_pydict(out, schema=schema)
+                out = {k: [] for k in schema.names}
+        if out["blob"]:
+            yield pa.RecordBatch.from_pydict(out, schema=schema)
 
-    schema = (
-        SEGMENT_SCHEMA
-        if key_type == "string"
-        else SEGMENT_SCHEMA.replace("series_id string", "series_id long", 1)
-    )
-    return joined.mapInArrow(run, schema)
+    return joined.mapInArrow(run, from_arrow_schema(_schema(key_type, blob=True)))
 
 
-def roundtrip_summaries(segmented: DataFrame, bundles: int | None = None) -> DataFrame:
+def roundtrip_summaries(segmented: DataFrame) -> DataFrame:
     """Fused encode -> decode -> per-segment summary for codec-verification
-    queries (gorilla_roundtrip): each segment is Gorilla-encoded and the BLOB
-    is immediately decoded back, with the summary computed from the DECODED
-    arrays — the same encode_segment/decode_segment calls the two-stage
-    operator chain makes, minus the Arrow round-trip of every raw point back
-    to the JVM between the stages and the second shuffle (measured ~1 s of
-    pure serde at 1M points / 15k series). Output: one row per segment
-    (series_id, segment_id, n_points, t_min, t_max, min/max/first/last of
-    the decoded values); callers combine per series with sum/min/max +
-    struct-extreme semantics."""
-    from pysatl_cpd_spark.operators.gorilla import decode_batch
+    queries (gorilla_roundtrip) over CO-LOCATED ``(series_id, segment_id, t,
+    value)`` input: each segment is Gorilla-encoded and the BLOB is decoded
+    back, with the summary computed from the DECODED arrays — the same
+    encode_segment/decode_batch calls the two-stage operator chain makes,
+    minus the Arrow round-trip of every raw point back to the JVM between
+    the stages. Blobs are decoded ``FLUSH_SEGMENTS`` at a time: one
+    vectorized ``decode_batch`` pass amortizes the per-blob anchor setup
+    (~2.8 ms per decode_segment vs ~0.05 ms/blob batched, measured).
+    Output: one row per segment (series_id, segment_id, n_points, t_min,
+    t_max, min/max/first/last of the decoded values); callers combine per
+    series with sum/min/max + struct-extreme semantics."""
+    from pyspark.sql.pandas.types import from_arrow_schema
 
-    if bundles is None:
-        bundles = 2 * segmented.sparkSession.sparkContext.defaultParallelism
+    from pysatl_cpd_spark.operators.colocated import iter_sorted_series
 
-    def run(pdf: pd.DataFrame) -> pd.DataFrame:
-        pdf = pdf.sort_values(["series_id", "segment_id", "t"], kind="mergesort")
-        sids = pdf["series_id"].to_numpy()
-        segs = pdf["segment_id"].to_numpy(dtype=np.int64)
-        ts = pdf["t"].to_numpy(dtype=np.int64)
-        values = pdf["value"].to_numpy(dtype=np.float64)
-        n = len(sids)
-        out = {k: [] for k in (
-            "series_id", "segment_id", "n_points", "t_min", "t_max",
-            "min_value", "max_value", "first_value", "last_value",
-        )}
-        if n:
-            new_grp = np.empty(n, dtype=bool)
-            new_grp[0] = True
-            new_grp[1:] = (sids[1:] != sids[:-1]) | (segs[1:] != segs[:-1])
-            bounds = np.flatnonzero(new_grp[1:]) + 1
-            los = np.concatenate([[0], bounds])
-            his = np.concatenate([bounds, [n]])
-            # encode every segment, then ONE vectorized decode_batch pass:
-            # per-blob decode_segment costs ~2.8 ms of anchor setup while
-            # decode_batch amortizes it to ~0.05 ms/blob (measured)
-            blobs = [
-                encode_segment(ts[lo:hi], values[lo:hi])
-                for lo, hi in zip(los, his)
-            ]
-            for lo, (dts, dvals) in zip(los, decode_batch(blobs)):
-                out["series_id"].append(sids[lo])
-                out["segment_id"].append(int(segs[lo]))
-                out["n_points"].append(int(dts.shape[0]))
-                out["t_min"].append(int(dts[0]))
-                out["t_max"].append(int(dts[-1]))
-                out["min_value"].append(float(np.min(dvals)))
-                out["max_value"].append(float(np.max(dvals)))
-                out["first_value"].append(float(dvals[0]))
-                out["last_value"].append(float(dvals[-1]))
-        res = pd.DataFrame(out)
-        if not out["series_id"]:  # typed empty frame for Arrow
-            for c, dt in (
-                ("segment_id", "int64"), ("n_points", "int64"),
-                ("t_min", "int64"), ("t_max", "int64"),
-                ("min_value", "float64"), ("max_value", "float64"),
-                ("first_value", "float64"), ("last_value", "float64"),
+    key_type = series_key_type(segmented)
+    pruned = segmented.select("series_id", "segment_id", "t", "value").sortWithinPartitions(
+        "series_id", "segment_id", "t"
+    )
+
+    def run(batches):
+        import pyarrow as pa
+
+        from pysatl_cpd_spark.operators.gorilla import decode_batch
+
+        schema = _schema(key_type, blob=False)
+        pending: "list[tuple[object, int, bytes]]" = []
+
+        def flush():
+            out: "dict[str, list]" = {k: [] for k in schema.names}
+            decoded = decode_batch([blob for _, _, blob in pending])
+            for (sid, seg_id, _), (dts, dvals) in zip(pending, decoded):
+                _summarize(out, sid, seg_id, dts, dvals)
+            pending.clear()
+            return pa.RecordBatch.from_pydict(out, schema=schema)
+
+        for sid, cols in iter_sorted_series(batches, ("segment_id", "t", "value")):
+            segs, ts = cols["segment_id"], cols["t"]
+            values = cols["value"].astype(np.float64, copy=False)
+            bounds = np.flatnonzero(np.diff(segs)) + 1
+            for lo, hi in zip(
+                np.concatenate([[0], bounds]), np.concatenate([bounds, [ts.shape[0]]])
             ):
-                res[c] = res[c].astype(dt)
-        return res
+                pending.append((sid, int(segs[lo]), encode_segment(ts[lo:hi], values[lo:hi])))
+            if len(pending) >= FLUSH_SEGMENTS:
+                yield flush()
+        if pending:
+            yield flush()
 
-    pruned = (
-        segmented.select("series_id", "segment_id", "t", "value")
-        .withColumn(
-            "bundle",
-            F.pmod(F.xxhash64("series_id", "segment_id"), F.lit(bundles)),
-        )
-        # explicit repartition: exempt from AQE byte-coalescing (cpd._bucketed)
-        .repartition(bundles, "bundle")
-    )
-    return pruned.groupBy("bundle").applyInPandas(
-        run,
-        "series_id string, segment_id long, n_points long, t_min long, "
-        "t_max long, min_value double, max_value double, "
-        "first_value double, last_value double",
-    )
-
-
-def compact_segments(encoded: DataFrame, min_points: int = 4096) -> DataFrame:
-    """Blob maintenance (the Gorilla paper's block-merge): adjacent segments
-    of a series whose point counts fall below ``min_points`` are decoded,
-    concatenated in time order, and re-encoded as one blob, greedily until
-    each output segment reaches the floor (the final segment of a series may
-    stay smaller). Output schema == SEGMENT_SCHEMA with ``segment_id``
-    renumbered densely; summaries are recomputed from the merged points, so
-    compact(decode) == decode — the roundtrip invariant is preserved and
-    pytest-asserted. Runs per-series in a grouped UDF over the (tiny)
-    segment-summary table; decode/encode are the vectorized batch kernels,
-    so compaction cost is O(points) numpy, not per-point Python."""
-    from pysatl_cpd_spark.operators.gorilla import decode_batch
-
-    def run(pdf: pd.DataFrame) -> pd.DataFrame:
-        pdf = pdf.sort_values("t_min")
-        decoded = decode_batch([bytes(b) for b in pdf["blob"]])
-        out = {k: [] for k in (
-            "series_id", "segment_id", "n_points", "t_min", "t_max",
-            "min_value", "max_value", "first_value", "last_value", "blob",
-        )}
-        acc_ts: list = []
-        acc_vals: list = []
-
-        def flush() -> None:
-            if not acc_ts:
-                return
-            ts = np.concatenate(acc_ts)
-            vals = np.concatenate(acc_vals)
-            out["series_id"].append(pdf["series_id"].iloc[0])
-            out["segment_id"].append(len(out["segment_id"]))
-            out["n_points"].append(len(ts))
-            out["t_min"].append(int(ts[0]))
-            out["t_max"].append(int(ts[-1]))
-            out["min_value"].append(float(np.min(vals)))
-            out["max_value"].append(float(np.max(vals)))
-            out["first_value"].append(float(vals[0]))
-            out["last_value"].append(float(vals[-1]))
-            out["blob"].append(encode_segment(ts, vals))
-            acc_ts.clear()
-            acc_vals.clear()
-
-        n_acc = 0
-        for ts, vals in decoded:
-            acc_ts.append(ts)
-            acc_vals.append(vals)
-            n_acc += len(ts)
-            if n_acc >= min_points:
-                flush()
-                n_acc = 0
-        flush()
-        return pd.DataFrame(out)
-
-    pruned = encoded.select("series_id", "t_min", "blob")
-    return pruned.groupBy("series_id").applyInPandas(run, SEGMENT_SCHEMA)
+    return pruned.mapInArrow(run, from_arrow_schema(_schema(key_type, blob=False)))
 
 
 def decode_segments(encoded: DataFrame) -> DataFrame:
     """Inverse: explode blobs back to (series_id, segment_id, t, value)."""
+    key_type = series_key_type(encoded)
 
     def run(batches):
+        import pyarrow as pa
+
         from pysatl_cpd_spark.operators.gorilla import decode_batch
 
-        for pdf in batches:
-            decoded = decode_batch([bytes(b) for b in pdf["blob"]])
-            counts = np.array([ts.shape[0] for ts, _ in decoded], dtype=np.int64)
-            yield pd.DataFrame(
-                {
-                    "series_id": pd.Series(
-                        np.repeat(pdf["series_id"].to_numpy(), counts), dtype=str
-                    ),
-                    "segment_id": pd.Series(
-                        np.repeat(pdf["segment_id"].to_numpy(), counts), dtype="int64"
-                    ),
-                    "t": pd.Series(
-                        np.concatenate([ts for ts, _ in decoded] or [np.empty(0, np.int64)]),
-                        dtype="int64",
-                    ),
-                    "value": pd.Series(
-                        np.concatenate([v for _, v in decoded] or [np.empty(0)]),
-                        dtype="float64",
-                    ),
-                }
+        for batch in batches:
+            decoded = decode_batch(batch.column("blob").to_pylist())
+            counts = [ts.shape[0] for ts, _ in decoded]
+            rows = pa.array(np.repeat(np.arange(batch.num_rows), counts))
+            yield pa.record_batch(
+                [
+                    batch.column("series_id").take(rows),
+                    batch.column("segment_id").take(rows),
+                    pa.array(np.concatenate([ts for ts, _ in decoded] or [np.empty(0, np.int64)])),
+                    pa.array(np.concatenate([v for _, v in decoded] or [np.empty(0)])),
+                ],
+                names=["series_id", "segment_id", "t", "value"],
             )
 
-    return encoded.select("series_id", "segment_id", "blob").mapInPandas(
-        run, "series_id string, segment_id long, t long, value double"
+    return encoded.select("series_id", "segment_id", "blob").mapInArrow(
+        run, f"series_id {key_type}, segment_id long, t long, value double"
     )

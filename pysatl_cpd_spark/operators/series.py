@@ -16,18 +16,15 @@ def events_series(
     """events(event_id, ts, user_id, ...) → (series_id, t, value) ordered per
     user; t is the per-user 0-based position by (ts, event_id).
 
-    The row_number window partitions by the *cast* key so the downstream
-    groupBy(series_id).applyInPandas reuses the same hash partitioning —
-    one shuffle for the whole detect pipeline instead of two.
-
     ``colocate=n`` puts an EXPLICIT ``repartition(n, series_id)`` under the
     window instead of the window's own ENSURE_REQUIREMENTS exchange: the
     same single shuffle, but (a) user-specified, so AQE's byte-based
     coalescing cannot merge the small-but-Python-heavy partitions down to a
     handful, and (b) a co-location guarantee — every partition holds only
-    complete series — so the zero-exchange colocated detectors
-    (detect_lockstep_colocated) can consume the result with no second
-    shuffle and no salt bucketing. Values are identical either way."""
+    complete series — which the engine's one detect/encode dispatch
+    (detect_lockstep_colocated, encode_segments_colocated) requires. Feed
+    every detect or encode from ``colocate=n``. Values are identical either
+    way."""
     keyed = events.select(
         F.col("user_id").cast("string").alias("series_id"),
         "ts",

@@ -4,7 +4,7 @@ expected change-point rows that are inlined as DuckDB VALUES oracles
 
 What a VALUES oracle built from these verifies about the engine: the Spark
 path end-to-end — series extraction and (ts, event_id) ordering, per-group
-sort inside the grouped UDF, window assignment, local→global index remap,
+sort inside the co-located dispatch, window assignment, local→global index remap,
 Arrow round-trips, and cross-process determinism of the kernels. What it does
 NOT independently verify: the floating-point recursions themselves — integer
 outputs (argmax indices, threshold crossings) require bit-identical fp
@@ -679,7 +679,8 @@ def knn_multivariate_rows(sf_dir: str, k: int, thr: float, indent: float) -> lis
 
 def expected_count_rows(sf_dir: str) -> list[tuple[str, int]]:
     """(series_id, n_change_points) for cpd_detect_counts (DropDetector 0.3);
-    counts include every localization, mirroring detect_counts (no < n cut)."""
+    counts include every localization, mirroring the dispatch's count mode
+    (no < n cut)."""
     series = events_series_arrays(sf_dir)
     rows = []
     for sid in series:

@@ -91,8 +91,8 @@ class CheckpointedJob:
         """Run (or resume) one stage. ``build`` produces the stage DataFrame;
         it is only invoked on a cache miss. ``bucket_key`` persists the output
         bucketed+sorted on that key (sources/catalog.write_bucketed_series),
-        making every downstream groupBy/applyInPandas on the key shuffle-free
-        — including after a resume."""
+        making downstream co-located detection on the key shuffle-free —
+        including after a resume."""
         data_path, lineage_path = self._paths(name)
         bucketing = (
             {

@@ -60,7 +60,7 @@ def get_spark(
     # inside a worker only adds contention)
     for var in ("OMP_NUM_THREADS", "OPENBLAS_NUM_THREADS", "MKL_NUM_THREADS"):
         os.environ.setdefault(var, "1")
-    # detector classes are cloudpickled BY REFERENCE into grouped-map UDFs, so
+    # detector classes are cloudpickled BY REFERENCE into mapInArrow UDFs, so
     # Python workers must import pysatl_cpd_spark themselves; put the package
     # parent on PYTHONPATH before the JVM launches (workers inherit it) so
     # jobs work from any cwd — on a real cluster --py-files serves this role
@@ -103,6 +103,11 @@ def get_spark(
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", "65536")
         .config("spark.ui.enabled", "false")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
+        # keep bucketed scans bucketed: the co-located detect/encode over a
+        # series-bucketed table requires no distribution, so the planner
+        # would otherwise demote the scan to plain file splits, and a bucket
+        # spread over several files or splits would cut series across tasks
+        .config("spark.sql.sources.bucketing.autoBucketedScan.enabled", "false")
         # scan-split size, parameterised (guide: big sequential scans on a
         # cluster want 512m-1g to cut task overhead; these local test tables
         # are single files of 5-130 MB with 1-6 row groups, where the 128m

@@ -18,8 +18,8 @@ Table references:
 
 Partitioning for the 10^12-turn transcripts table: ``days(ts)`` (time prune
 for retention + rollup windows) × ``bucket(conv_id)`` (co-locates each
-conversation's turns so the per-conv detector groupBy shuffles within, not
-across, buckets; bucket count sized to executor count).
+conversation's turns so the co-located detect dispatch reads complete
+series per task with no shuffle; bucket count sized to executor count).
 """
 
 from __future__ import annotations
@@ -90,11 +90,14 @@ def write_bucketed_series(
     path: str | None = None,
 ) -> DataFrame:
     """Persist a keyed series table bucketed + sorted by its group key so
-    every downstream groupBy/applyInPandas on that key is SHUFFLE-FREE: the
-    bucketed scan already satisfies the hash-distribution requirement, so
-    the detector stage reads straight into Python workers with zero
-    exchanges (plan-asserted in tests). This is the 100 TB co-location
+    downstream detection is SHUFFLE-FREE: every bucket holds complete
+    series, so the co-located ``detect_lockstep_colocated`` reads straight
+    into Python workers with zero exchanges (plan-asserted in tests). This is the 100 TB co-location
     story — pay the shuffle once at ingest, never again per detection run.
+    Co-location holds only while the scan stays bucketed (one task per
+    bucket): ``session.get_spark`` sets
+    ``spark.sql.sources.bucketing.autoBucketedScan.enabled=false``, and any
+    other session reading this table for detection must do the same.
     Size ``n_buckets`` to the executor count. ``path`` makes it an external
     table at that location (session-safe: the default managed location
     outlives the in-memory catalog and collides on re-create). Returns the
@@ -120,7 +123,7 @@ def write_bucketed_series_coded(
     INGEST (operators/keycompact.py): factorize ``series_id`` once into a
     deterministic int64 ``code``, store the points table bucketed + sorted
     BY THE CODE, and persist the (series_id, code) dim table alongside.
-    Downstream zero-exchange detect/encode then run ``key_type="long"`` —
+    Downstream zero-exchange detect/encode then take the bigint key as is —
     no repeated string column ever crosses the Arrow socket on any later
     detection run, and the factorization join is amortized into the one
     ingest shuffle a bucketed table pays anyway. Returns ``(points, dim)``

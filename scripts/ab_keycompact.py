@@ -56,12 +56,13 @@ def main():
         prep=250,
     )
 
-    # fixed change points for the encode A/B, materialized (see ab_colocated_serde)
+    # fixed change points for the encode A/B, materialized so the encode
+    # arms time the encode alone
     detect_lockstep_colocated(series_str, factory).write.mode("overwrite").parquet(
         "/tmp/ab_cps.parquet"
     )
     cps_str = spark.read.parquet("/tmp/ab_cps.parquet")
-    detect_lockstep_colocated(series_cod, factory, key_type="long").write.mode(
+    detect_lockstep_colocated(series_cod, factory).write.mode(
         "overwrite"
     ).parquet("/tmp/ab_cps_coded.parquet")
     cps_cod = spark.read.parquet("/tmp/ab_cps_coded.parquet")
@@ -80,14 +81,11 @@ def main():
     arms = {
         "detect_str": lambda: detect_lockstep_colocated(series_str, factory).count(),
         "detect_coded": lambda: attach_series_id(
-            detect_lockstep_colocated(series_cod, factory, key_type="long"), dim
+            detect_lockstep_colocated(series_cod, factory), dim
         ).count(),
         "encode_str": lambda: encode_segments_colocated(series_str, cps_str).count(),
         "encode_coded": lambda: attach_series_id(
-            encode_segments_colocated(
-                series_cod, cps_cod, key_type="long"
-            ),
-            dim,
+            encode_segments_colocated(series_cod, cps_cod), dim
         ).count(),
     }
     for fn in arms.values():  # warm every worker/codepath once

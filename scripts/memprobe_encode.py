@@ -1,4 +1,4 @@
-"""Encode-path twin of memprobe_colocated.py (round-8 verdict task 4).
+"""Worker peak-RSS probe of the streamed encode path (round-8 verdict task 4).
 
 encode_segments_colocated streams the same sorted partitions as the
 streamed detect runner and additionally holds Gorilla OUTPUT buffers; the
@@ -13,8 +13,8 @@ Arms:
   per-segment encode_segment, flush every 8192 segments (the loop body of
   operators/segments.encode_segments_colocated.run).
 - materialized: the pre-round-7 shape — whole-partition Arrow table +
-  pandas sort + per-group numpy split (encode_segments_adaptive.run's
-  memory behavior on one partition).
+  pandas sort + per-group numpy split (the memory behavior of the retired
+  salted encode on one partition).
 
 Usage: python scripts/memprobe_encode.py {streamed|materialized} <n_neighbors>
 Prints one JSON line; results table in BENCH.md round-9 section.
@@ -107,7 +107,7 @@ def main():
                 blobs.append(encode_segment(ts[lo:hi], values[lo:hi]))
                 n_segments += 1
                 pending += 1
-                if pending >= 8192:  # flush_segments: drop the output buffer
+                if pending >= 8192:  # FLUSH_SEGMENTS: drop the output buffer
                     blob_bytes += sum(len(b) for b in blobs)
                     blobs, pending = [], 0
             blob_bytes += sum(len(b) for b in blobs)

@@ -13,18 +13,11 @@ sys.path.insert(0, "/root/repo")
 
 from pyspark.sql import functions as F  # noqa: E402
 
-from pysatl_cpd_spark.detectors import (  # noqa: E402
-    ArgmaxLocalizer,
-    BayesianLinearHeuristic,
-    BayesianOnlineDetector,
-    ConstantHazard,
-    HeuristicGaussianVsExponential,
-    ThresholdDetector,
-)
-from pysatl_cpd_spark.operators.cpd import detect_online  # noqa: E402
+from pysatl_cpd_spark.detectors.lockstep import LockstepLinearBOCPD  # noqa: E402
+from pysatl_cpd_spark.operators.cpd import detect_lockstep_colocated  # noqa: E402
 from pysatl_cpd_spark.operators.metrics import confusion_matrix  # noqa: E402
 from pysatl_cpd_spark.operators.rollup import rollup_tier  # noqa: E402
-from pysatl_cpd_spark.operators.segments import encode_segments_adaptive  # noqa: E402
+from pysatl_cpd_spark.operators.segments import encode_segments_colocated  # noqa: E402
 from pysatl_cpd_spark.operators.series import turn_rate_series  # noqa: E402
 from pysatl_cpd_spark.plans.lineage import CheckpointedJob, StageSpec  # noqa: E402
 from pysatl_cpd_spark.session import get_spark  # noqa: E402
@@ -45,23 +38,18 @@ def run(workdir: str) -> None:
         return turn_rate_series(res["generate"].df.drop("is_cp"))
 
     def detect_stage(res):
-        return detect_online(
+        # the batched kernel of BayesianLinearHeuristic(BayesianOnlineDetector(
+        # ConstantHazard, HeuristicGaussianVsExponential, 20, Threshold(0.04),
+        # Argmax), 500, 250) — bit-identical per series
+        return detect_lockstep_colocated(
             res["series"].df,
-            lambda: BayesianLinearHeuristic(
-                lambda: BayesianOnlineDetector(
-                    ConstantHazard(1.0 / (1.0 - 0.5 ** (1.0 / 500))),
-                    HeuristicGaussianVsExponential(),
-                    20,
-                    ThresholdDetector(0.04),
-                    ArgmaxLocalizer(),
-                ),
-                500,
-                250,
+            lambda: LockstepLinearBOCPD(
+                1.0 / (1.0 - 0.5 ** (1.0 / 500)), 20, 0.04, 500, 250
             ),
         )
 
     def segments_stage(res):
-        return encode_segments_adaptive(res["series"].df, res["detect"].df)
+        return encode_segments_colocated(res["series"].df, res["detect"].df)
 
     def rollup_stage(res):
         return rollup_tier(
@@ -83,8 +71,9 @@ def run(workdir: str) -> None:
             outputs={"conv_id", "turn_idx", "role", "text", "tool", "ts", "is_cp"},
         ),
         StageSpec(
-            # bucketed by series: the detect/segments groupBys downstream
-            # read this stage SHUFFLE-FREE, on first run and on resume
+            # bucketed by series: every bucket holds complete series, so the
+            # co-located detect/encode downstream read this stage
+            # SHUFFLE-FREE, on first run and on resume
             "series",
             series_stage,
             inputs={"conv_id", "turn_idx", "ts"},

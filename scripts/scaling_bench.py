@@ -70,9 +70,9 @@ spark = get_spark(cores=cores, app_name=f"scaling_{{cores}}", shuffle_partitions
                   master=master)
 series = spark.read.parquet({SERIES_PATH!r})
 raw = spark.read.parquet({RAW_PATH!r})
-# the engine's production detect path (lockstep kernel); n_buckets pinned so
-# both parallelism levels execute the IDENTICAL 128-task set, like the
-# shuffle-partition pin below
+# the engine's production detect path (lockstep kernel); the 128-way series
+# repartition below pins both parallelism levels to the IDENTICAL task set,
+# like the shuffle-partition pin
 factory = lambda: LockstepLinearBOCPD(rate=1.0/(1.0-0.5**(1.0/500)),
     learning_sample_size=20, threshold=0.04, start_after=500, prep=250)
 

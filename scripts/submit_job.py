@@ -47,17 +47,10 @@ def main() -> None:
     else:
         spark = SparkSession.builder.appName("cpd_rollup_job").getOrCreate()
 
-    from pysatl_cpd_spark.detectors import (
-        ArgmaxLocalizer,
-        BayesianLinearHeuristic,
-        BayesianOnlineDetector,
-        ConstantHazard,
-        HeuristicGaussianVsExponential,
-        ThresholdDetector,
-    )
-    from pysatl_cpd_spark.operators.cpd import detect_online
+    from pysatl_cpd_spark.detectors.lockstep import LockstepLinearBOCPD
+    from pysatl_cpd_spark.operators.cpd import detect_lockstep_colocated
     from pysatl_cpd_spark.operators.rollup import rollup_all_tiers
-    from pysatl_cpd_spark.operators.segments import encode_segments_adaptive
+    from pysatl_cpd_spark.operators.segments import encode_segments_colocated
     from pysatl_cpd_spark.operators.series import turn_rate_series
     from pysatl_cpd_spark.plans.lineage import CheckpointedJob
     from pysatl_cpd_spark.sources.transcripts import transcripts_table
@@ -80,20 +73,24 @@ def main() -> None:
         "series", lambda: turn_rate_series(raw.df), inputs_fp=job.stage_fp("load")
     )
 
+    def colocated():
+        # the co-located dispatch needs complete series per partition
+        return series.df.repartition(spark.sparkContext.defaultParallelism, "series_id")
+
     def run_detect():
-        inner = lambda: BayesianOnlineDetector(  # noqa: E731
-            ConstantHazard(1.0 / (1.0 - 0.5 ** (1.0 / 500))),
-            HeuristicGaussianVsExponential(),
-            20,
-            ThresholdDetector(0.04),
-            ArgmaxLocalizer(),
+        # batched BayesianLinearHeuristic(BayesianOnlineDetector(ConstantHazard,
+        # HeuristicGaussianVsExponential, 20, Threshold(0.04), Argmax), 500, 250)
+        return detect_lockstep_colocated(
+            colocated(),
+            lambda: LockstepLinearBOCPD(
+                1.0 / (1.0 - 0.5 ** (1.0 / 500)), 20, 0.04, 500, 250
+            ),
         )
-        return detect_online(series.df, lambda: BayesianLinearHeuristic(inner, 500, 250))
 
     cps = job.stage("detect", run_detect, inputs_fp=job.stage_fp("series"))
     job.stage(
         "segments",
-        lambda: encode_segments_adaptive(series.df, cps.df),
+        lambda: encode_segments_colocated(colocated(), cps.df),
         inputs_fp=job.stage_fp("detect"),
     )
     for tier, df in rollup_all_tiers(

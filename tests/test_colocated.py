@@ -1,7 +1,7 @@
 """Streaming colocated runner (operators/colocated.py): the contract guard,
-and parity of the sorted-batch-stream paths under adversarial batch/flush
-sizes (series spanning many Arrow batches; many kernel flushes per
-partition)."""
+parity of the one dispatch with the in-process kernels under adversarial
+batch/flush sizes (series spanning many Arrow batches; many kernel flushes
+per partition), and null values passing through as NaN."""
 
 import numpy as np
 import pytest
@@ -34,70 +34,94 @@ def test_assert_colocated_guard(spark):
         assert_colocated(bad)
 
 
-def test_detect_colocated_multi_batch_multi_flush_parity(spark):
+def test_detect_colocated_multi_batch_multi_flush_parity(spark, monkeypatch):
     """Force every series across many Arrow batches (tiny
     maxRecordsPerBatch) and many kernel flushes per partition (tiny
-    flush_points): output must equal the salted lockstep dispatch exactly,
-    and validate=True must pass on contract-satisfying input."""
-    from pysatl_cpd_spark.detectors import LockstepCusum
-    from pysatl_cpd_spark.operators.cpd import (
-        detect_lockstep_colocated,
-        detect_online_lockstep,
-    )
+    FLUSH_POINTS): output must equal the sequential detector run in-process
+    on the collected series exactly, on contract-satisfying input."""
+    from inprocess import local_cps
+
+    from pysatl_cpd_spark.detectors import CusumDetector, LockstepCusum
+    from pysatl_cpd_spark.operators import cpd
+    from pysatl_cpd_spark.operators.colocated import assert_colocated
 
     series = _series_df(spark)
-    fac = lambda: LockstepCusum(k=0.05, h=2.0)  # noqa: E731
+    assert_colocated(series)
+    monkeypatch.setattr(cpd, "FLUSH_POINTS", 50)
     key = "spark.sql.execution.arrow.maxRecordsPerBatch"
     old = spark.conf.get(key)
     try:
         spark.conf.set(key, "17")
         got = {
             (r.series_id, r.change_point)
-            for r in detect_lockstep_colocated(
-                series, fac, flush_points=50, validate=True
+            for r in cpd.detect_lockstep_colocated(
+                series, lambda: LockstepCusum(k=0.05, h=2.0)
             ).collect()
         }
     finally:
         spark.conf.set(key, old)
-    want = {
-        (r.series_id, r.change_point)
-        for r in detect_online_lockstep(series, fac).collect()
-    }
+    want = local_cps(series, lambda v: CusumDetector(k=0.05, h=2.0).localize(v))
     assert got == want and len(got) >= 1
 
 
-def test_encode_colocated_multi_batch_multi_flush_parity(spark):
-    from pysatl_cpd_spark.operators.segments import (
-        encode_segments_adaptive,
-        encode_segments_colocated,
-    )
+def test_encode_colocated_multi_batch_multi_flush_parity(spark, monkeypatch):
+    from inprocess import local_segments, segment_rows
+
+    from pysatl_cpd_spark.operators import segments
+    from pysatl_cpd_spark.operators.colocated import assert_colocated
 
     series = _series_df(spark)
+    assert_colocated(series)
     cps = series.filter(F.col("t") % 37 == 3).select(
         "series_id", F.col("t").alias("change_point")
     )
 
-    def key_rows(df):
-        return {
-            (
-                r["series_id"], r["segment_id"], r["n_points"], r["t_min"],
-                r["t_max"], r["first_value"], r["last_value"], bytes(r["blob"]),
-            )
-            for r in df.collect()
-        }
-
+    monkeypatch.setattr(segments, "FLUSH_SEGMENTS", 3)
     conf_key = "spark.sql.execution.arrow.maxRecordsPerBatch"
     old = spark.conf.get(conf_key)
     try:
         spark.conf.set(conf_key, "13")
-        got = key_rows(
-            encode_segments_colocated(
-                series, cps, flush_segments=3, validate=True
-            )
-        )
+        got = segment_rows(segments.encode_segments_colocated(series, cps))
     finally:
         spark.conf.set(conf_key, old)
-    assert got == key_rows(encode_segments_adaptive(series, cps))
+    assert got == local_segments(series, cps)
+
+
+def test_null_values_reach_the_detector_as_nan(spark):
+    """A null ``value`` crosses the dispatch as NaN (only the ``_cp`` marker
+    is zero-filled): a series with a null through the sequential adapter
+    equals the detector run in-process on the same NaN array."""
+    from pysatl_cpd_spark.detectors import CusumDetector
+    from pysatl_cpd_spark.operators.cpd import detect_lockstep_colocated, per_series
+
+    rng = np.random.default_rng(5)
+    vals = np.concatenate([rng.normal(0, 1, 80), rng.normal(6, 1, 80)])
+    vals[100] = np.nan  # after the first change point, before the second
+    df = spark.createDataFrame(
+        [("s", t, None if np.isnan(v) else float(v)) for t, v in enumerate(vals)],
+        "series_id string, t long, value double",
+    ).repartition(2, "series_id")
+    detect = lambda v: CusumDetector(k=0.5, h=5.0).localize(v)  # noqa: E731
+    got = sorted(
+        r.change_point
+        for r in detect_lockstep_colocated(df, per_series(detect)).collect()
+    )
+    assert got == sorted(detect(vals))
+    assert got != sorted(detect(np.nan_to_num(vals)))
+
+    # a null element of a vector value reaches the kernel as NaN too
+    from inprocess import local_cps
+
+    vec = spark.createDataFrame(
+        [("v", t, [None if t == 7 else float(t), 2.0 * t]) for t in range(20)],
+        "series_id string, t long, vec array<double>",
+    ).repartition(2, "series_id")
+    nan_rows = lambda v: np.flatnonzero(np.isnan(v).any(axis=1)).tolist()  # noqa: E731
+    got_vec = {
+        (r.series_id, r.change_point)
+        for r in detect_lockstep_colocated(vec, per_series(nan_rows)).collect()
+    }
+    assert got_vec == local_cps(vec, nan_rows, value="vec") == {("v", 7)}
 
 
 @settings(max_examples=40, deadline=None)

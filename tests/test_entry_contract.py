@@ -5,6 +5,8 @@ step with the working tree."""
 import os
 import zipfile
 
+import pytest
+
 import __spark_entry__ as entry_mod
 
 ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
@@ -112,12 +114,17 @@ def _plan_lines(plan: str) -> "list[tuple[int, str]]":
     return out
 
 
-def _streamed_side_lines(plan: str, op: str) -> "list[list[str]]":
+def _streamed_side_lines(
+    plan: str, op: str, allow_paid_repartition: bool = False
+) -> "list[list[str]]":
     """For each occurrence of ``op``, return its subtree lines EXCLUDING
     subtrees rooted at BroadcastExchange (build sides may shuffle their tiny
     inputs) and at InMemoryRelation (the cached feed's internal plan holds
     the one deliberately-paid ingest shuffle) — i.e. the operator's streamed
-    input path down to the cache/scan boundary."""
+    input path down to the cache/scan boundary. With
+    ``allow_paid_repartition`` the walk also stops at that paid shuffle
+    itself (the caller's REPARTITION_BY_NUM on series_id), for queries that
+    repartition their input instead of reading a cached feed."""
     lines = _plan_lines(plan)
     subtrees = []
     for i, (d, text) in enumerate(lines):
@@ -135,12 +142,18 @@ def _streamed_side_lines(plan: str, op: str) -> "list[list[str]]":
             if "BroadcastExchange" in tt or "InMemoryRelation" in tt:
                 skip_deeper_than = dd
                 continue
+            if (allow_paid_repartition and "REPARTITION_BY_NUM" in tt
+                    and "series_id" in tt):
+                skip_deeper_than = dd
+                continue
             collected.append(tt)
         subtrees.append(collected)
     return subtrees
 
 
-def _assert_colocated_detect_plan(plan: str, n_map_in_arrow: "int | None"):
+def _assert_colocated_detect_plan(
+    plan: str, n_map_in_arrow: "int | None", allow_paid_repartition: bool = False
+):
     """The load-bearing zero-exchange properties (robust across Spark
     versions / AQE config, per round-7 advice — no exact exchange-count
     pins):
@@ -152,7 +165,9 @@ def _assert_colocated_detect_plan(plan: str, n_map_in_arrow: "int | None"):
         (REPARTITION_BY_NUM on series_id);
       - between each MapInArrow and the cached feed / a broadcast build
         side there is NO shuffle of any kind on its streamed input — the
-        property that makes detect+encode zero-exchange."""
+        property that makes detect+encode zero-exchange. With
+        ``allow_paid_repartition`` the caller's series_id repartition may
+        sit on that path (and nothing else may)."""
     import re
 
     assert "FlatMapGroupsIn" not in plan, "salted grouped-map dispatch leaked in"
@@ -163,7 +178,7 @@ def _assert_colocated_detect_plan(plan: str, n_map_in_arrow: "int | None"):
     assert any(
         "REPARTITION_BY_NUM" in e and "series_id" in e for e in exchanges
     ), sorted(exchanges)
-    streamed = _streamed_side_lines(plan, "MapInArrow")
+    streamed = _streamed_side_lines(plan, "MapInArrow", allow_paid_repartition)
     if n_map_in_arrow is not None:
         assert len(streamed) == n_map_in_arrow, plan[:800]
     assert streamed, plan[:800]
@@ -187,23 +202,58 @@ def test_flagship_zero_exchange_plan(spark):
     _assert_colocated_detect_plan(plan, n_map_in_arrow=2)
 
 
-def test_gapfill_zero_exchange_detect_plan(spark):
-    """transcripts_segment_gapfill runs the SAME zero-exchange colocated
-    detect (a future edit must not silently reintroduce a salt shuffle).
-    Its gap-fill windows legitimately require one series_id
-    ENSURE_REQUIREMENTS exchange over the cached feed (the AQE-wrapped
-    cache exposes UnknownPartitioning, so the window cannot reuse the
-    ingest partitioning) — that is a window requirement, not a salted
-    dispatch, and the detect stage itself stays exchange-free. The initial
-    plan may print the uncached detect subtree once per consumer; every
-    occurrence must be colocated."""
-    import __spark_entry__ as entry
+def _dispatching_queries() -> "list[str]":
+    """Every queries() entry whose body calls a detect or encode operator."""
+    import inspect
+    import re
 
-    df = entry.queries()["transcripts_segment_gapfill"](
-        spark, "/root/testdata/sf0.001"
-    )
+    pat = re.compile(r"\b(detect_\w+|encode_segments\w*|roundtrip_summaries)\(")
+    return [
+        name
+        for name, fn in entry_mod.queries().items()
+        if pat.search(inspect.getsource(fn))
+    ]
+
+
+def test_dispatching_queries_found():
+    names = _dispatching_queries()
+    assert {"gorilla_roundtrip", "cpd_detect_counts", "cpd_knn_multivariate",
+            "cpd_graph", "transcripts_cpd_rollup"} <= set(names)
+    assert len(names) >= 17, names
+
+
+# Queries that stream detect/encode straight from a cached, co-located
+# feed: their MapInArrow streamed sides must hold no exchange at all.
+_CACHED_FEED = {
+    "transcripts_cpd_rollup",
+    "transcripts_cpd_rollup_coded",
+    "transcripts_segment_gapfill",
+    "cpd_colocated_metrics",
+    "entry",
+}
+
+
+@pytest.mark.parametrize("name", _dispatching_queries() + ["entry"])
+def test_no_salted_dispatch_plan(spark, name):
+    """Every query that detects or encodes — and entry() — runs the one
+    co-located dispatch: no FlatMapGroupsIn* (salted grouped-map) node and
+    no exchange on a MapInArrow streamed side. A query that reads a cached
+    feed (``_CACHED_FEED``) gets the strict walk; any other query may have
+    exactly its own series_id repartition on that side, and nothing else.
+    transcripts_segment_gapfill's gap-fill windows
+    legitimately add one series_id ENSURE_REQUIREMENTS exchange over the
+    cached feed (a window requirement off the detect's streamed side), and
+    an initial plan may print an uncached detect subtree once per consumer;
+    every occurrence must be co-located."""
+    if name == "entry":
+        df = entry_mod.entry(spark)
+    else:
+        df = entry_mod.queries()[name](spark, "/root/testdata/sf0.001")
     plan = df._jdf.queryExecution().executedPlan().toString()
-    _assert_colocated_detect_plan(plan, n_map_in_arrow=None)
+    _assert_colocated_detect_plan(
+        plan, n_map_in_arrow=None,
+        allow_paid_repartition=name not in _CACHED_FEED,
+    )
 
 
 def test_dist_zip_matches_working_tree():

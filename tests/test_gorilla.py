@@ -120,59 +120,15 @@ def test_legacy_v1_blob_decodes():
     assert np.array_equal(out[1][0], ts + 7) and np.array_equal(out[1][1], values * 2)
 
 
-def test_compact_segments_roundtrip(spark):
-    """Compaction merges small adjacent blobs without losing a point:
-    decode(compact(encoded)) == decode(encoded) == the original series,
-    segment count drops, and summaries match the merged points."""
-    from pyspark.sql import functions as F
-
-    from pysatl_cpd_spark.operators.segments import (
-        compact_segments,
-        decode_segments,
-        encode_segments_adaptive,
-    )
-
-    rng = np.random.default_rng(11)
-    rows = []
-    for s in range(4):
-        ts = np.cumsum(rng.integers(1, 9, 500))
-        vals = rng.normal(size=500)
-        rows += [(f"s{s}", int(t), float(v)) for t, v in zip(ts, vals)]
-    series = spark.createDataFrame(rows, "series_id string, t long, value double")
-    # many tiny segments: a change point every ~50 points
-    cps = series.filter(F.col("t") % 50 == 3).select(
-        "series_id", F.col("t").alias("change_point")
-    )
-    encoded = encode_segments_adaptive(series, cps).cache()
-    compacted = compact_segments(encoded, min_points=200).cache()
-
-    n_before = encoded.count()
-    n_after = compacted.count()
-    assert n_after < n_before
-    assert compacted.filter(F.col("n_points") < 200).groupBy("series_id").count().count() <= 4  # only tails
-
-    orig = decode_segments(encoded).select("series_id", "t", "value")
-    comp = decode_segments(compacted).select("series_id", "t", "value")
-    assert orig.exceptAll(comp).count() == 0 and comp.exceptAll(orig).count() == 0
-    # summaries consistent with their own blobs
-    chk = compacted.select(
-        "series_id", "n_points",
-        (F.col("t_max") >= F.col("t_min")).alias("ord_ok"),
-    ).toPandas()
-    assert chk["ord_ok"].all()
-    assert int(compacted.agg(F.sum("n_points")).collect()[0][0]) == len(rows)
-
-
-def test_encode_colocated_matches_adaptive(spark):
+def test_encode_colocated_matches_inprocess(spark):
     """encode_segments_colocated over explicitly repartitioned series must
-    emit byte-identical rows (blob included) to encode_segments_adaptive,
-    and add no exchange on the series side beyond the caller's repartition."""
+    emit byte-identical rows (blob included) to encode_segment run
+    in-process on the collected segments, and add no exchange on the series
+    side beyond the caller's repartition."""
+    from inprocess import local_segments, segment_rows
     from pyspark.sql import functions as F
 
-    from pysatl_cpd_spark.operators.segments import (
-        encode_segments_adaptive,
-        encode_segments_colocated,
-    )
+    from pysatl_cpd_spark.operators.segments import encode_segments_colocated
 
     rng = np.random.default_rng(5)
     rows = []
@@ -187,15 +143,6 @@ def test_encode_colocated_matches_adaptive(spark):
         "series_id", F.col("t").alias("change_point")
     )
 
-    def key(df):
-        return {
-            (
-                r["series_id"], r["segment_id"], r["n_points"], r["t_min"],
-                r["t_max"], r["first_value"], r["last_value"], bytes(r["blob"]),
-            )
-            for r in df.collect()
-        }
-
     col = encode_segments_colocated(series, cps)
     plan = col._jdf.queryExecution().executedPlan().toString()
     base = series._jdf.queryExecution().executedPlan().toString()
@@ -204,19 +151,17 @@ def test_encode_colocated_matches_adaptive(spark):
     assert plan.count("Exchange hashpartitioning") <= base.count(
         "Exchange hashpartitioning"
     ) + 2, plan[:800]
-    assert key(col) == key(encode_segments_adaptive(series, cps))
+    assert segment_rows(col) == local_segments(series, cps)
 
 
 def test_encode_colocated_edge_shapes(spark):
-    """Edge parity vs adaptive: no change points at all; a marker on a
-    series' first row; back-to-back markers (single-point segments); more
-    partitions than series (some partitions empty)."""
+    """Edge parity vs the in-process codec: no change points at all; a
+    marker on a series' first row; back-to-back markers (single-point
+    segments); more partitions than series (some partitions empty)."""
+    from inprocess import local_segments, segment_rows
     from pyspark.sql import functions as F
 
-    from pysatl_cpd_spark.operators.segments import (
-        encode_segments_adaptive,
-        encode_segments_colocated,
-    )
+    from pysatl_cpd_spark.operators.segments import encode_segments_colocated
 
     rows = []
     for s, ts_list in (
@@ -229,13 +174,6 @@ def test_encode_colocated_edge_shapes(spark):
         rows, "series_id string, t long, value double"
     ).repartition(8, "series_id")  # > n_series: some partitions empty
 
-    def key(df):
-        return {
-            (r["series_id"], r["segment_id"], r["n_points"], r["t_min"],
-             r["t_max"], bytes(r["blob"]))
-            for r in df.collect()
-        }
-
     cases = [
         [],                                  # no markers
         [("a", 1)],                          # marker on first row of a
@@ -247,6 +185,6 @@ def test_encode_colocated_edge_shapes(spark):
         )
         if not markers:
             cps = cps.filter(F.col("change_point") > 0)  # truly empty
-        got = key(encode_segments_colocated(series, cps))
-        want = key(encode_segments_adaptive(series, cps))
+        got = segment_rows(encode_segments_colocated(series, cps))
+        want = local_segments(series, cps)
         assert got == want, (markers, got ^ want)

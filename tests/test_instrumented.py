@@ -1,6 +1,8 @@
-"""Per-series metrics instrumentation of the detection operator."""
+"""Per-series metrics instrumentation: the one dispatch's ``output="metrics"``
+mode."""
 
 import numpy as np
+from inprocess import collect_series, local_cps
 
 from pysatl_cpd_spark.detectors import (
     ArgmaxLocalizer,
@@ -9,10 +11,10 @@ from pysatl_cpd_spark.detectors import (
     GaussianConjugate,
     ThresholdDetector,
 )
-from pysatl_cpd_spark.operators.cpd import detect_online, detect_online_instrumented
+from pysatl_cpd_spark.operators.cpd import detect_lockstep_colocated, per_series
 
 
-def test_instrumented_matches_plain(spark):
+def test_metrics_mode_matches_inprocess(spark):
     rows = []
     for seed in (1, 2):
         np.random.seed(seed)
@@ -20,7 +22,9 @@ def test_instrumented_matches_plain(spark):
             [np.random.normal(0, 1, 250), np.random.normal(5, 2, 250)]
         )
         rows.extend((f"s{seed}", t, float(v)) for t, v in enumerate(data))
-    df = spark.createDataFrame(rows, "series_id string, t long, value double")
+    df = spark.createDataFrame(
+        rows, "series_id string, t long, value double"
+    ).repartition(2, "series_id")
     factory = lambda: BayesianOnlineDetector(  # noqa: E731
         ConstantHazard(1.0 / (1.0 - 0.5 ** (1.0 / 500))),
         GaussianConjugate(),
@@ -28,11 +32,11 @@ def test_instrumented_matches_plain(spark):
         ThresholdDetector(0.04),
         ArgmaxLocalizer(),
     )
-    plain = {
-        (r["series_id"], r["change_point"])
-        for r in detect_online(df, factory).collect()
-    }
-    inst = detect_online_instrumented(df, factory).collect()
+    detect = lambda v: factory().process_series(v)  # noqa: E731
+    plain = local_cps(df, detect)
+    inst = detect_lockstep_colocated(
+        df, per_series(detect), output="metrics"
+    ).collect()
     from_inst = {
         (r["series_id"], cp) for r in inst for cp in r["change_points"]
     }
@@ -42,11 +46,11 @@ def test_instrumented_matches_plain(spark):
     assert all(r["n_change_points"] == len(r["change_points"]) for r in inst)
 
 
-def test_instrumented_bucketed_parity(spark):
-    """The bucketed dispatch (many series per grouped-map call) emits the
-    same per-series rows as per-series grouping — every column except the
-    dispatch-dependent kernel_ms timing — across bucket counts including
-    buckets that force series to share a UDF call."""
+def test_metrics_mode_partitioning_parity(spark):
+    """Metrics rows do not depend on how series are spread over partitions —
+    every column except the dispatch-dependent kernel_ms timing and
+    partition_id — across partition counts from one partition holding every
+    series to more partitions than series, and equal the in-process kernel."""
     rows = []
     for seed in range(6):
         np.random.seed(seed)
@@ -62,6 +66,7 @@ def test_instrumented_bucketed_parity(spark):
         ThresholdDetector(0.04),
         ArgmaxLocalizer(),
     )
+    detect = lambda v: factory().process_series(v)  # noqa: E731
 
     def key_rows(collected):
         return {
@@ -72,25 +77,25 @@ def test_instrumented_bucketed_parity(spark):
             for r in collected
         }
 
-    per_series = key_rows(
-        detect_online_instrumented(df, factory, n_buckets=0).collect()
-    )
-    for nb in (2, 13):
-        got = detect_online_instrumented(df, factory, n_buckets=nb).collect()
-        assert key_rows(got) == per_series and len(got) == 6
+    want = {
+        (sid, len(t), len(cps), tuple(int(t[c]) for c in cps))
+        for sid, (t, v) in collect_series(df).items()
+        for cps in [[c for c in detect(v) if c < len(t)]]
+    }
+    for n_parts in (1, 2, 13):
+        got = detect_lockstep_colocated(
+            df.repartition(n_parts, "series_id"), per_series(detect), output="metrics"
+        ).collect()
+        assert key_rows(got) == want and len(got) == 6
         assert all(r["kernel_ms"] > 0 for r in got)
 
 
-def test_colocated_instrumented_matches_plain_and_reports_lineage(spark):
-    """The zero-exchange instrumented dispatch: detections equal the plain
-    colocated dispatch; every series reports the partition that processed
+def test_metrics_mode_matches_cps_and_reports_lineage(spark):
+    """Metrics mode of the zero-exchange dispatch: detections equal the
+    ``output="cps"`` rows; every series reports the partition that processed
     it (consistent with its co-located placement), its n_points, and a
     kernel_ms. Plan stays exchange-free after the caller repartition."""
     from pysatl_cpd_spark.detectors.cusum import LockstepCusum
-    from pysatl_cpd_spark.operators.cpd import (
-        detect_colocated_instrumented,
-        detect_lockstep_colocated,
-    )
 
     rows = []
     rng = np.random.default_rng(3)
@@ -106,7 +111,7 @@ def test_colocated_instrumented_matches_plain_and_reports_lineage(spark):
     )
     fac = lambda: LockstepCusum(k=0.05, h=2.0)  # noqa: E731
 
-    inst_df = detect_colocated_instrumented(df, fac)
+    inst_df = detect_lockstep_colocated(df, fac, output="metrics")
     plan = inst_df._jdf.queryExecution().executedPlan().toString()
     assert "Exchange hashpartitioning" not in plan.split("InMemoryRelation")[0]
 
@@ -127,11 +132,10 @@ def test_colocated_instrumented_matches_plain_and_reports_lineage(spark):
     assert all(0 <= r.partition_id < 4 for r in inst)
 
 
-def test_colocated_instrumented_long_keys(spark):
-    """key_type='long' (the compacted path) emits int64 series ids with the
-    same per-series metrics."""
+def test_metrics_mode_long_keys(spark):
+    """A bigint series_id (the compacted path) comes back as int64 series ids
+    with the same per-series metrics."""
     from pysatl_cpd_spark.detectors.cusum import LockstepCusum
-    from pysatl_cpd_spark.operators.cpd import detect_colocated_instrumented
 
     rows = []
     rng = np.random.default_rng(5)
@@ -142,7 +146,7 @@ def test_colocated_instrumented_long_keys(spark):
         rows, "series_id long, t long, value double"
     ).repartition(2, "series_id")
     fac = lambda: LockstepCusum(k=0.05, h=2.0)  # noqa: E731
-    inst = detect_colocated_instrumented(df, fac, key_type="long").collect()
+    inst = detect_lockstep_colocated(df, fac, output="metrics").collect()
     assert {r.series_id for r in inst} == {3, 7}
     assert all(r.n_points == 160 for r in inst)
     assert sum(r.n_change_points for r in inst) > 0

@@ -73,14 +73,23 @@ def test_catalog_parquet_roundtrip_and_iceberg_gate(spark, tmp_path):
         load_table(spark, "iceberg:ice.db.transcripts")
 
 
+def _assert_bucketed_scan(plan: str):
+    """The detect reads the table with a bucketed scan (one task per
+    bucket). A scan the planner demoted to plain file splits would only be
+    co-located by accident of the file layout."""
+    scans = [line for line in plan.splitlines() if "FileScan" in line]
+    assert scans and all("Bucketed: true" in line for line in scans), scans
+
+
 def test_bucketed_series_detection_is_shuffle_free(spark, tmp_path):
     """Co-location law: detection over a series table bucketed by its group
     key runs with ZERO exchanges (the ingest shuffle is paid once), and the
-    results equal the unbucketed path. ``n_buckets=0`` is the explicit
-    opt-out of UDF salt-bucketing: the caller asserts storage co-location,
-    so detection groups by series_id directly instead of re-shuffling."""
+    results equal the sequential detector run in-process on the collected
+    series — here a sequential detector through the ``per_series`` adapter."""
+    from inprocess import local_cps
+
     from pysatl_cpd_spark.detectors import CusumDetector
-    from pysatl_cpd_spark.operators.cpd import detect_offline
+    from pysatl_cpd_spark.operators.cpd import detect_lockstep_colocated, per_series
     from pysatl_cpd_spark.operators.series import events_series
     from pysatl_cpd_spark.sources.catalog import write_bucketed_series
 
@@ -91,27 +100,26 @@ def test_bucketed_series_detection_is_shuffle_free(spark, tmp_path):
         series, "series_bucketed_t", n_buckets=8, path=str(tmp_path / "series_b")
     )
 
-    factory = lambda: CusumDetector(k=1.0, h=10.0)  # noqa: E731
-    out_b = detect_offline(bucketed, factory, n_buckets=0)
+    detect = lambda v: CusumDetector(k=1.0, h=10.0).localize(v)  # noqa: E731
+    out_b = detect_lockstep_colocated(bucketed, per_series(detect))
     plan = out_b._jdf.queryExecution().executedPlan().toString()
     assert plan.count("Exchange hashpartitioning") == 0, plan[:500]
+    _assert_bucketed_scan(plan)
 
     got_b = {(r.series_id, r.change_point) for r in out_b.collect()}
-    got_u = {(r.series_id, r.change_point) for r in detect_offline(series, factory).collect()}
-    assert got_b == got_u and got_b
+    assert got_b == local_cps(series, detect) and got_b
 
 
 def test_bucketed_table_feeds_colocated_lockstep(spark, tmp_path):
     """The full production detect plan: bucket-ingest the series table once
     (write_bucketed_series), then run the zero-exchange LOCKSTEP dispatch
     straight off the bucketed scan — no exchange anywhere in the detection
-    plan, rows equal to the salted dispatch. (Companion to the sequential
-    n_buckets=0 law above, for the batched kernel.)"""
-    from pysatl_cpd_spark.detectors.cusum import LockstepCusum
-    from pysatl_cpd_spark.operators.cpd import (
-        detect_lockstep_colocated,
-        detect_online_lockstep,
-    )
+    plan, rows equal to the sequential detector run in-process. (Companion
+    to the sequential-adapter law above, for the batched kernel.)"""
+    from inprocess import local_cps
+
+    from pysatl_cpd_spark.detectors.cusum import CusumDetector, LockstepCusum
+    from pysatl_cpd_spark.operators.cpd import detect_lockstep_colocated
     from pysatl_cpd_spark.operators.series import events_series
     from pysatl_cpd_spark.sources.catalog import write_bucketed_series
 
@@ -127,12 +135,10 @@ def test_bucketed_table_feeds_colocated_lockstep(spark, tmp_path):
     out = detect_lockstep_colocated(bucketed, fac)
     plan = out._jdf.queryExecution().executedPlan().toString()
     assert plan.count("Exchange") == 0, plan[:500]
+    _assert_bucketed_scan(plan)
 
     got = {(r.series_id, r.change_point) for r in out.collect()}
-    want = {
-        (r.series_id, r.change_point)
-        for r in detect_online_lockstep(series, fac, n_buckets=4).collect()
-    }
+    want = local_cps(series, lambda v: CusumDetector(k=1.0, h=10.0).localize(v))
     assert got == want and got
 
 
@@ -178,15 +184,14 @@ def test_write_table_format_roundtrip(spark, tmp_path):
 
 def test_bucketed_coded_table_feeds_long_key_colocated(spark, tmp_path):
     """write_bucketed_series_coded: the dense-int factorization paid at
-    ingest — the coded bucketed scan feeds key_type='long' colocated detect
-    with ZERO exchanges, and after the broadcast re-attach the rows equal
-    the string-keyed path. Codes must be stable across re-reads (stored,
+    ingest — the coded bucketed scan feeds the colocated detect with its
+    bigint key and ZERO exchanges, and after the broadcast re-attach the
+    rows equal the sequential detector run in-process. Codes must be stable across re-reads (stored,
     not session-pinned)."""
-    from pysatl_cpd_spark.detectors.cusum import LockstepCusum
-    from pysatl_cpd_spark.operators.cpd import (
-        detect_lockstep_colocated,
-        detect_online_lockstep,
-    )
+    from inprocess import local_cps
+
+    from pysatl_cpd_spark.detectors.cusum import CusumDetector, LockstepCusum
+    from pysatl_cpd_spark.operators.cpd import detect_lockstep_colocated
     from pysatl_cpd_spark.operators.keycompact import attach_series_id
     from pysatl_cpd_spark.operators.series import events_series
     from pysatl_cpd_spark.sources.catalog import write_bucketed_series_coded
@@ -204,18 +209,16 @@ def test_bucketed_coded_table_feeds_long_key_colocated(spark, tmp_path):
     assert sorted(dmap.values()) == list(range(len(dmap)))
 
     fac = lambda: LockstepCusum(k=1.0, h=10.0)  # noqa: E731
-    out = detect_lockstep_colocated(points, fac, key_type="long")
+    out = detect_lockstep_colocated(points, fac)
     plan = out._jdf.queryExecution().executedPlan().toString()
     assert plan.count("Exchange hashpartitioning") == 0, plan[:500]
+    _assert_bucketed_scan(plan)
 
     got = {
         (r.series_id, r.change_point)
         for r in attach_series_id(out, dim).collect()
     }
-    want = {
-        (r.series_id, r.change_point)
-        for r in detect_online_lockstep(series, fac, n_buckets=4).collect()
-    }
+    want = local_cps(series, lambda v: CusumDetector(k=1.0, h=10.0).localize(v))
     assert got == want and got
 
 

@@ -62,7 +62,7 @@ def test_coded_detect_matches_string_detect(spark, series_df):
     }
     coded, dim = compact_series_key(series_df, n_partitions=4)
     got_df = attach_series_id(
-        detect_lockstep_colocated(coded, _factory, key_type="long"), dim
+        detect_lockstep_colocated(coded, _factory), dim
     )
     assert dict(got_df.dtypes)["series_id"] == "string"
     got = {(r.series_id, r.change_point) for r in got_df.collect()}
@@ -78,9 +78,9 @@ def test_coded_encode_matches_string_encode(spark, series_df):
     }
     coded, dim = compact_series_key(series_df, n_partitions=4)
     coded = coded.cache()
-    cps_coded = detect_lockstep_colocated(coded, _factory, key_type="long")
+    cps_coded = detect_lockstep_colocated(coded, _factory)
     enc_coded = attach_series_id(
-        encode_segments_colocated(coded, cps_coded, key_type="long"), dim
+        encode_segments_colocated(coded, cps_coded), dim
     )
     got = {
         (r.series_id, r.segment_id, r.n_points, r.t_min, r.t_max, bytes(r.blob))
@@ -89,11 +89,15 @@ def test_coded_encode_matches_string_encode(spark, series_df):
     assert got == want and len(want) >= 12  # blobs byte-identical
 
 
-def test_key_type_validated():
-    with pytest.raises(ValueError):
-        detect_lockstep_colocated(None, _factory, key_type="int")
-    with pytest.raises(ValueError):
-        encode_segments_colocated(None, None, key_type="int")
+def test_key_type_validated(spark):
+    """The key type is read from the series_id column; an unsupported type
+    raises and names the contract."""
+    df = spark.createDataFrame([(1, 0, 1.0)], "series_id int, t long, value double")
+    cps = spark.createDataFrame([(1, 0)], "series_id int, change_point long")
+    with pytest.raises(ValueError, match="co-located dispatch contract"):
+        detect_lockstep_colocated(df, _factory)
+    with pytest.raises(ValueError, match="co-located dispatch contract"):
+        encode_segments_colocated(df, cps)
 
 
 def test_iter_sorted_series_int_fast_path():
@@ -227,7 +231,7 @@ def test_coded_path_reduces_python_socket_bytes(spark):
         )
     coded, _dim = compact_series_key(fresh_df, n_partitions=4)
     coded_sent = python_data_sent(
-        detect_lockstep_colocated(coded, _factory, key_type="long")
+        detect_lockstep_colocated(coded, _factory)
     )
     assert coded_sent is not None and string_sent > 0
     assert coded_sent < 0.9 * string_sent, (coded_sent, string_sent)

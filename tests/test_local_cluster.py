@@ -18,7 +18,7 @@ import json, sys
 sys.path.insert(0, "/root/repo")
 from pysatl_cpd_spark.session import get_spark
 from pysatl_cpd_spark.detectors.lockstep import LockstepLinearBOCPD
-from pysatl_cpd_spark.operators.cpd import detect_online_lockstep
+from pysatl_cpd_spark.operators.cpd import detect_lockstep_colocated
 from pysatl_cpd_spark.operators.series import turn_rate_series
 from pysatl_cpd_spark.sources.transcripts import transcripts_table
 
@@ -27,13 +27,13 @@ spark = get_spark(cores=4, app_name="lc_parity", shuffle_partitions=8,
                   master=master)
 tr = transcripts_table(spark, n_conversations=24, avg_turns=220, seed=5,
                        with_text=False)
-series = turn_rate_series(tr)
+series = turn_rate_series(tr).repartition(8, "series_id")
 factory = lambda: LockstepLinearBOCPD(
     rate=1.0 / (1.0 - 0.5 ** (1.0 / 500)), learning_sample_size=20,
     threshold=0.04, start_after=500, prep=250)
 cps = sorted(
     (r.series_id, int(r.change_point))
-    for r in detect_online_lockstep(series, factory, n_buckets=8).collect()
+    for r in detect_lockstep_colocated(series, factory).collect()
 )
 print("RESULT:" + json.dumps(cps))
 """

@@ -159,21 +159,21 @@ def test_lockstep_fuzz(seed):
         assert got[i] == _sequential_cps(s), f"seed {seed} series {i}"
 
 
-def test_detect_online_lockstep_operator_parity(spark):
-    """Operator-level differential on real synthesized transcripts: the
-    salt-bucketed lockstep operator returns exactly the same
-    (series_id, change_point) rows as sequential detect_online."""
-    from pysatl_cpd_spark.operators.cpd import (
-        detect_online,
-        detect_online_lockstep,
-    )
+def test_lockstep_operator_parity(spark):
+    """Operator-level differential on real synthesized transcripts: the one
+    co-located dispatch with the lockstep kernel returns exactly the
+    (series_id, change_point) rows of the sequential detector run in-process
+    on the collected series."""
+    from inprocess import local_cps
+
+    from pysatl_cpd_spark.operators.cpd import detect_lockstep_colocated
     from pysatl_cpd_spark.operators.series import turn_rate_series
     from pysatl_cpd_spark.sources.transcripts import transcripts_table
 
     tr = transcripts_table(
         spark, n_conversations=60, avg_turns=250, seed=11, with_text=False
     )
-    series = turn_rate_series(tr).cache()
+    series = turn_rate_series(tr).repartition(4, "series_id").cache()
 
     inner = lambda: BayesianOnlineDetector(  # noqa: E731
         ConstantHazard(RATE),
@@ -182,62 +182,29 @@ def test_detect_online_lockstep_operator_parity(spark):
         ThresholdDetector(THR),
         ArgmaxLocalizer(),
     )
-    seq_fac = lambda: BayesianLinearHeuristic(inner, START_AFTER, PREP)  # noqa: E731
+    seq = local_cps(
+        series,
+        lambda v: BayesianLinearHeuristic(inner, START_AFTER, PREP).process_series(v),
+    )
     lock_fac = lambda: LockstepLinearBOCPD(  # noqa: E731
         RATE, LSS, THR, START_AFTER, PREP
     )
-
-    seq = {
-        (r.series_id, r.change_point)
-        for r in detect_online(series, seq_fac).collect()
-    }
     lock = {
         (r.series_id, r.change_point)
-        for r in detect_online_lockstep(series, lock_fac, n_buckets=4).collect()
+        for r in detect_lockstep_colocated(series, lock_fac).collect()
     }
     series.unpersist()
     assert seq == lock and len(seq) > 10
 
 
-def test_lockstep_arrow_vs_pandas_dispatch(spark):
-    """The applyInArrow dispatch and the pandas fallback must emit the exact
-    same (series_id, change_point) rows — the fallback exists for Spark
-    builds without applyInArrow, so both code paths stay live."""
-    from pysatl_cpd_spark.operators.cpd import detect_online_lockstep
-    from pysatl_cpd_spark.operators.series import turn_rate_series
-    from pysatl_cpd_spark.sources.transcripts import transcripts_table
-
-    tr = transcripts_table(
-        spark, n_conversations=40, avg_turns=220, seed=23, with_text=False
-    )
-    series = turn_rate_series(tr).cache()
-    lock_fac = lambda: LockstepLinearBOCPD(  # noqa: E731
-        RATE, LSS, THR, START_AFTER, PREP
-    )
-
-    arrow = {
-        (r.series_id, r.change_point)
-        for r in detect_online_lockstep(series, lock_fac, n_buckets=4).collect()
-    }
-    pandas_rows = {
-        (r.series_id, r.change_point)
-        for r in detect_online_lockstep(
-            series, lock_fac, n_buckets=4, arrow=False
-        ).collect()
-    }
-    series.unpersist()
-    assert arrow == pandas_rows and len(arrow) > 5
-
-
 def test_lockstep_colocated_zero_exchange_and_parity(spark):
     """detect_lockstep_colocated over an explicitly repartitioned series must
     add ZERO exchanges beyond the caller's own repartition, and emit exactly
-    the salted dispatch's rows (kernel lanes are independent of batch
+    the sequential detector's rows (kernel lanes are independent of batch
     composition)."""
-    from pysatl_cpd_spark.operators.cpd import (
-        detect_lockstep_colocated,
-        detect_online_lockstep,
-    )
+    from inprocess import local_cps
+
+    from pysatl_cpd_spark.operators.cpd import detect_lockstep_colocated
     from pysatl_cpd_spark.operators.series import turn_rate_series
     from pysatl_cpd_spark.sources.transcripts import transcripts_table
 
@@ -253,30 +220,36 @@ def test_lockstep_colocated_zero_exchange_and_parity(spark):
     plan = out._jdf.queryExecution().executedPlan().toString()
     base_plan = series._jdf.queryExecution().executedPlan().toString()
     # the detection itself adds ZERO exchanges on top of the input plan's own
-    # (synthesis range-repartition + the caller's conv_id repartition); the
-    # salted path would add one more (repartition by salt bucket)
+    # (synthesis range-repartition + the caller's conv_id repartition)
     assert plan.count("Exchange hashpartitioning") == base_plan.count(
         "Exchange hashpartitioning"
     ), plan[:800]
 
     colocated = {(r.series_id, r.change_point) for r in out.collect()}
-    salted = {
-        (r.series_id, r.change_point)
-        for r in detect_online_lockstep(series, lock_fac, n_buckets=4).collect()
-    }
+    inner = lambda: BayesianOnlineDetector(  # noqa: E731
+        ConstantHazard(RATE),
+        HeuristicGaussianVsExponential(),
+        LSS,
+        ThresholdDetector(THR),
+        ArgmaxLocalizer(),
+    )
+    seq = local_cps(
+        series,
+        lambda v: BayesianLinearHeuristic(inner, START_AFTER, PREP).process_series(v),
+    )
     series.unpersist()
-    assert colocated == salted and len(colocated) > 5
+    assert colocated == seq and len(colocated) > 5
 
 
 def test_lockstep_colocated_edge_shapes(spark):
     """Colocated dispatch with empty partitions and degenerate series: more
     partitions than series (zero-row Arrow inputs), single-point series,
-    and a no-detection workload — must match the salted path exactly."""
-    from pysatl_cpd_spark.detectors.cusum import LockstepCusum
-    from pysatl_cpd_spark.operators.cpd import (
-        detect_lockstep_colocated,
-        detect_online_lockstep,
-    )
+    and a no-detection workload — must match the sequential detector run
+    in-process exactly."""
+    from inprocess import local_cps
+
+    from pysatl_cpd_spark.detectors.cusum import CusumDetector, LockstepCusum
+    from pysatl_cpd_spark.operators.cpd import detect_lockstep_colocated
 
     rows = [("solo", 0, 1.0)]
     for t in range(120):
@@ -291,11 +264,10 @@ def test_lockstep_colocated_edge_shapes(spark):
         (r.series_id, r.change_point)
         for r in detect_lockstep_colocated(series, fac).collect()
     }
-    salted = {
-        (r.series_id, r.change_point)
-        for r in detect_online_lockstep(series, fac, n_buckets=4).collect()
-    }
-    assert coloc == salted
+    seq = local_cps(
+        series, lambda v: CusumDetector(k=0.5, h=5.0, learning_steps=20).localize(v)
+    )
+    assert coloc == seq
     assert any(s == "step" for s, _ in coloc)  # the step series detects
     assert all(s != "flat" for s, _ in coloc)  # the flat one does not
 
@@ -575,18 +547,18 @@ def test_lockstep_drop_hypothesis_parity(series):
         assert got[i] == _drop_sequential(s), f"series {i} len {len(s)}"
 
 
-def test_detect_counts_lockstep_operator_parity(spark):
-    """detect_counts_lockstep == detect_counts (sequential kernel) row for
-    row — INCLUDING series with zero change points, which a naive
-    groupBy-count over detections would drop."""
+def test_counts_mode_operator_parity(spark):
+    """The one dispatch's ``output="counts"`` == the sequential kernel's
+    ``len(process_series(values))`` run in-process, row for row — INCLUDING
+    series with zero change points, which a naive groupBy-count over
+    detections would drop."""
+    from inprocess import local_counts
+
     from pysatl_cpd_spark.detectors import (
         DropDetector,
         GaussianConjugate as GC,
     )
-    from pysatl_cpd_spark.operators.cpd import (
-        detect_counts,
-        detect_counts_lockstep,
-    )
+    from pysatl_cpd_spark.operators.cpd import detect_lockstep_colocated
 
     rng = np.random.default_rng(77)
     rows = []
@@ -601,7 +573,9 @@ def test_detect_counts_lockstep_operator_parity(spark):
         rows += [
             (f"s{s}", int(t), float(v)) for t, v in enumerate(vals)
         ]
-    df = spark.createDataFrame(rows, "series_id string, t long, value double")
+    df = spark.createDataFrame(
+        rows, "series_id string, t long, value double"
+    ).repartition(3, "series_id")
 
     seq_factory = lambda: BayesianOnlineDetector(  # noqa: E731
         ConstantHazard(RATE), GC(), LSS, DropDetector(0.3), ArgmaxLocalizer()
@@ -609,13 +583,12 @@ def test_detect_counts_lockstep_operator_parity(spark):
     lock_factory = lambda: LockstepLinearBOCPD(  # noqa: E731
         RATE, LSS, 0.3, model="gauss", bare=True, detector="drop"
     )
-    want = {
-        (r.series_id, r.n_change_points)
-        for r in detect_counts(df, seq_factory).collect()
-    }
+    want = set(local_counts(df, lambda v: seq_factory().process_series(v)).items())
     got = {
         (r.series_id, r.n_change_points)
-        for r in detect_counts_lockstep(df, lock_factory, n_buckets=3).collect()
+        for r in detect_lockstep_colocated(
+            df, lock_factory, output="counts"
+        ).collect()
     }
     assert got == want and len(got) == 8
     assert any(c == 0 for _, c in got)  # the zero-count rows are present

@@ -230,10 +230,11 @@ def test_offline_count_transcription_parity():
     assert got == want
 
 
-def test_detect_counts_lockstep_offline_operator(spark):
-    """Distributed count dispatch with the offline counting kernel ==
-    per-series sequential BayesianOffline.detect, zero-count rows included."""
-    from pysatl_cpd_spark.operators.cpd import detect_counts_lockstep
+def test_counts_mode_offline_operator(spark):
+    """The one dispatch's count mode with the offline counting kernel ==
+    per-series sequential BayesianOffline.detect run in-process, zero-count
+    rows included."""
+    from pysatl_cpd_spark.operators.cpd import detect_lockstep_colocated
 
     rng = np.random.default_rng(7)
     rows = []
@@ -244,13 +245,15 @@ def test_detect_counts_lockstep_offline_operator(spark):
         want[sid] = _sequential_counts([v], 20)[0]
         rows += [(sid, int(t), float(x)) for t, x in enumerate(v)]
     assert sum(want.values()) >= 2 and min(want.values()) == 0
-    df = spark.createDataFrame(rows, "series_id string, t long, value double")
+    df = spark.createDataFrame(
+        rows, "series_id string, t long, value double"
+    ).repartition(3, "series_id")
     got = {
         r.series_id: r.n_change_points
-        for r in detect_counts_lockstep(
+        for r in detect_lockstep_colocated(
             df,
             lambda: LockstepBayesianOffline(learning_steps=20, mode="detect"),
-            n_buckets=3,
+            output="counts",
         ).collect()
     }
     assert got == want

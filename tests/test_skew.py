@@ -6,7 +6,12 @@ import numpy as np
 from pyspark.sql import functions as F
 
 from pysatl_cpd_spark.detectors import CusumDetector
-from pysatl_cpd_spark.operators.cpd import detect_offline, detect_offline_chunked
+from pysatl_cpd_spark.operators.cpd import (
+    chunk_series,
+    detect_lockstep_colocated,
+    per_series,
+    unchunk,
+)
 from pysatl_cpd_spark.sources.transcripts import (
     synthesize_transcripts,
     transcripts_table,
@@ -24,13 +29,16 @@ def test_chunked_detection_on_hot_series(spark):
     rows += [("cold", t, float(v)) for t, v in enumerate(np.random.normal(0, 1, 200))]
     df = spark.createDataFrame(rows, "series_id string, t long, value double")
 
-    algo = lambda: CusumDetector(k=1.5, h=20.0)  # noqa: E731
+    algo = per_series(lambda v: CusumDetector(k=1.5, h=20.0).localize(v))
     plain = {
-        (r["series_id"], r["change_point"]) for r in detect_offline(df, algo).collect()
+        (r["series_id"], r["change_point"])
+        for r in detect_lockstep_colocated(df.repartition(2, "series_id"), algo).collect()
     }
+    chunks = chunk_series(df, chunk_size=2000, overlap=400)
+    assert chunks.select("series_id").distinct().count() > 2  # the hot key fans out
     chunked = {
         (r["series_id"], r["change_point"])
-        for r in detect_offline_chunked(df, algo, chunk_size=2000, overlap=400).collect()
+        for r in unchunk(detect_lockstep_colocated(chunks, algo)).collect()
     }
     assert any(s == "hot" and 4990 <= c <= 5010 for s, c in plain)
     assert any(s == "hot" and 4990 <= c <= 5010 for s, c in chunked)

@@ -8,9 +8,11 @@ from pyspark.sql import functions as F
 
 from pysatl_cpd_spark.detectors import BayesianOffline, CusumDetector
 from pysatl_cpd_spark.operators.cpd import (
-    detect_offline,
-    detect_offline_chunked,
-    detect_windowed,
+    chunk_series,
+    detect_lockstep_colocated,
+    per_series,
+    unchunk,
+    windowed,
 )
 from pysatl_cpd_spark.operators.gapfill import gap_fill
 from pysatl_cpd_spark.operators.metrics import confusion_matrix, result_diff
@@ -18,7 +20,7 @@ from pysatl_cpd_spark.operators.rollup import DEFAULT_TIERS, apply_retention, ro
 from pysatl_cpd_spark.operators.segments import (
     assign_segments,
     decode_segments,
-    encode_segments,
+    encode_segments_colocated,
 )
 
 
@@ -30,7 +32,13 @@ def make_series_df(spark, seeds=(1, 2, 3), n=500, cp=250):
             [np.random.normal(0, 1, cp), np.random.normal(5, 2, n - cp)]
         )
         rows.extend((f"s{seed}", t, float(v)) for t, v in enumerate(data))
-    return spark.createDataFrame(rows, "series_id string, t long, value double")
+    return spark.createDataFrame(
+        rows, "series_id string, t long, value double"
+    ).repartition(2, "series_id")
+
+
+_bocpd = per_series(lambda v: BayesianOffline().localize(v))
+_cusum = per_series(lambda v: CusumDetector(k=1.0, h=10.0).localize(v))
 
 
 class TestDetectOverGroups:
@@ -38,7 +46,7 @@ class TestDetectOverGroups:
         df = make_series_df(spark)
         got = {
             r["series_id"]: r["change_point"]
-            for r in detect_offline(df, BayesianOffline).collect()
+            for r in detect_lockstep_colocated(df, _bocpd).collect()
         }
         for seed in (1, 2, 3):
             np.random.seed(seed)
@@ -56,22 +64,22 @@ class TestDetectOverGroups:
             [np.random.normal(0, 1, 250), np.random.normal(5, 2, 250)]
         )
         rows = [("s", 1000 + 2 * t, float(v)) for t, v in enumerate(data)]
-        df = spark.createDataFrame(rows, "series_id string, t long, value double")
-        got = detect_offline(df, BayesianOffline).collect()[0]["change_point"]
+        df = spark.createDataFrame(
+            rows, "series_id string, t long, value double"
+        ).repartition(2, "series_id")
+        got = detect_lockstep_colocated(df, _bocpd).collect()[0]["change_point"]
         local_cp = BayesianOffline().localize(data)[0]
         assert got == 1000 + 2 * local_cp
 
     def test_chunked_equals_unchunked_on_clear_cp(self, spark):
         df = make_series_df(spark, seeds=(7,))
         plain = {
-            r["change_point"]
-            for r in detect_offline(df, lambda: CusumDetector(k=1.0, h=10.0)).collect()
+            r["change_point"] for r in detect_lockstep_colocated(df, _cusum).collect()
         }
+        chunks = chunk_series(df, chunk_size=400, overlap=200)
         chunked = {
             r["change_point"]
-            for r in detect_offline_chunked(
-                df, lambda: CusumDetector(k=1.0, h=10.0), chunk_size=400, overlap=200
-            ).collect()
+            for r in unchunk(detect_lockstep_colocated(chunks, _cusum)).collect()
         }
         # the true CP (≈250) must survive chunking
         assert any(225 <= c <= 275 for c in plain)
@@ -79,8 +87,11 @@ class TestDetectOverGroups:
 
     def test_windowed_dedupes(self, spark):
         df = make_series_df(spark, seeds=(1,))
-        out = detect_windowed(
-            df, lambda: CusumDetector(k=1.0, h=10.0), window_length=300, shift_factor=0.5
+        out = detect_lockstep_colocated(
+            df,
+            windowed(
+                lambda: CusumDetector(k=1.0, h=10.0), window_length=300, shift_factor=0.5
+            ),
         ).toPandas()
         assert out.duplicated(["series_id", "change_point"]).sum() == 0
 
@@ -165,7 +176,7 @@ class TestSegments:
             [("s1", 250)], "series_id string, change_point long"
         )
         seg = assign_segments(df, cps)
-        enc = encode_segments(seg)
+        enc = encode_segments_colocated(df, cps)
         assert enc.count() == 2
         dec = decode_segments(enc).toPandas().sort_values("t").reset_index(drop=True)
         orig = df.toPandas().sort_values("t").reset_index(drop=True)
@@ -220,26 +231,25 @@ class TestMetrics:
 
 
 def test_cusum_prefilter_gating_is_exact(spark):
-    """The JVM pre-filter is an exact gate: detect_offline over the flagged
+    """The JVM pre-filter is an exact gate: detection over the flagged
     subset produces the identical CP set as over all series (unflagged series
     provably alarm nowhere — same statistic, same learned mu)."""
-    from pysatl_cpd_spark.detectors import CusumDetector
-    from pysatl_cpd_spark.operators.cpd import detect_offline
     from pysatl_cpd_spark.operators.cusum import cusum_prefilter
     from pysatl_cpd_spark.operators.series import turn_rate_series
     from pysatl_cpd_spark.sources.transcripts import transcripts_table
 
     tr = transcripts_table(spark, n_conversations=12, avg_turns=250, seed=7)
-    series = turn_rate_series(tr).cache()
-    factory = lambda: CusumDetector(k=0.05, h=2.0)  # noqa: E731
+    series = turn_rate_series(tr).repartition(4, "series_id").cache()
+    factory = per_series(lambda v: CusumDetector(k=0.05, h=2.0).localize(v))
     ungated = {
-        (r.series_id, r.change_point) for r in detect_offline(series, factory).collect()
+        (r.series_id, r.change_point)
+        for r in detect_lockstep_colocated(series, factory).collect()
     }
     alarmed = cusum_prefilter(series, k=0.05, h=2.0)
     gated_series = series.join(F.broadcast(alarmed), "series_id", "left_semi")
     gated = {
         (r.series_id, r.change_point)
-        for r in detect_offline(gated_series, factory).collect()
+        for r in detect_lockstep_colocated(gated_series, factory).collect()
     }
     assert gated == ungated
     # and the gate actually prunes (otherwise it's not a pre-filter)
@@ -312,25 +322,28 @@ def test_north_star_composition_end_to_end(spark):
     through every stage)."""
     from pyspark.sql import functions as F
 
-    from pysatl_cpd_spark.detectors import CusumDetector
-    from pysatl_cpd_spark.operators.cpd import detect_offline
     from pysatl_cpd_spark.operators.gapfill import segment_gapfill_turns
-    from pysatl_cpd_spark.operators.segments import (
-        decode_segments,
-        encode_segments_adaptive,
-    )
     from pysatl_cpd_spark.operators.series import turn_rate_series
     from pysatl_cpd_spark.sources.transcripts import transcripts_table
 
     tr = transcripts_table(spark, n_conversations=6, avg_turns=200, seed=9)
-    series = turn_rate_series(tr.filter(F.col("role") != "tool")).cache()
-    cps = detect_offline(series, lambda: CusumDetector(k=0.05, h=2.0)).cache()
-    filled = segment_gapfill_turns(series, cps).select(
-        "series_id", "t", F.col("value_interp").alias("value")
+    series = (
+        turn_rate_series(tr.filter(F.col("role") != "tool"))
+        .repartition(4, "series_id")
+        .cache()
+    )
+    cps = detect_lockstep_colocated(
+        series, per_series(lambda v: CusumDetector(k=0.05, h=2.0).localize(v))
     ).cache()
+    filled = (
+        segment_gapfill_turns(series, cps)
+        .select("series_id", "t", F.col("value_interp").alias("value"))
+        .repartition(4, "series_id")
+        .cache()
+    )
     assert filled.count() > series.count()  # real holes were filled
 
-    encoded = encode_segments_adaptive(filled, cps)
+    encoded = encode_segments_colocated(filled, cps)
     decoded = decode_segments(encoded).select("series_id", "t", "value")
     assert decoded.exceptAll(filled).count() == 0
     assert filled.exceptAll(decoded).count() == 0

@@ -6,7 +6,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from pysatl_cpd_spark.detectors.classification import ClassificationCpd, KnnClassifier
-from pysatl_cpd_spark.operators.cpd import detect_offline_multivariate
+from pysatl_cpd_spark.operators.cpd import detect_lockstep_colocated, per_series
 from pysatl_cpd_spark.operators.rollup import rollup_tier
 from pysatl_cpd_spark.streaming.rollup import streaming_rollup
 
@@ -63,9 +63,14 @@ def test_multivariate_detection(spark):
             ]
         )
         rows.extend((sid, t, [float(x) for x in v]) for t, v in enumerate(data))
-    df = spark.createDataFrame(rows, "series_id string, t long, vec array<double>")
-    out = detect_offline_multivariate(
-        df, lambda: ClassificationCpd(KnnClassifier(7), "mcc", 0.85, 0.25)
+    df = spark.createDataFrame(
+        rows, "series_id string, t long, vec array<double>"
+    ).repartition(2, "series_id")
+    out = detect_lockstep_colocated(
+        df,
+        per_series(
+            lambda v: ClassificationCpd(KnnClassifier(7), "mcc", 0.85, 0.25).localize(v)
+        ),
     )
     got = out.groupBy("series_id").agg(F.min("change_point").alias("first_cp")).collect()
     assert len(got) == 2
